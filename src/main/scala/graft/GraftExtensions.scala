@@ -149,6 +149,16 @@ object GraftFunctions {
             new java.math.BigDecimal(strArg(args(1), "divisor")))
         }),
       (
+        new FunctionIdentifier("graft_no_null_elements"),
+        new ExpressionInfo(classOf[graft.compile.NoNullElements].getName,
+          "graft_no_null_elements"),
+        (args: Seq[Expression]) => {
+          require(args.length == 1,
+            "graft_no_null_elements(a ARRAY) — true iff no element is null; " +
+              "the `[*].type` check emitted for nullable-element arrays")
+          graft.compile.NoNullElements(args(0))
+        }),
+      (
         new FunctionIdentifier("rolling_hashes"),
         new ExpressionInfo(classOf[graft.ops.RollingHashes].getName, "rolling_hashes"),
         (args: Seq[Expression]) => {

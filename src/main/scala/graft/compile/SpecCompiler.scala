@@ -274,11 +274,17 @@ object SpecCompiler {
     // schemas keep the engine's branch semantics (documented residual
     // divergence, SURVEY.md §7.4).
     // Dead-check elision: when the physical type says elements can
-    // never be null (containsNull=false — e.g. tokens read from parquet
-    // with required elements), the `[*].type` gen and every per-element
-    // null guard are statically dead and ELIDED — the hot path stays at
-    // one array traversal per keyword, not per keyword + guard.
+    // never be null (containsNull=false), the `[*].type` gen and every
+    // per-element null guard are statically dead and ELIDED. Only frames
+    // built in memory carry containsNull=false: Spark reads every file
+    // relation `asNullable`, so a Parquet column of `required` elements
+    // arrives with containsNull=true, as do JSON- and Arrow-sourced
+    // arrays. The nullable case therefore has to stay fused as well:
+    // its `[*].type` check is the codegen'd [[NoNullElements]] kernel,
+    // not `forall(c, x -> x IS NOT NULL)`.
     val nullableElems = at.containsNull
+    def noNulls(c: Column): Column = org.apache.spark.sql.GraftColumnBridge.column(
+      NoNullElements(org.apache.spark.sql.GraftColumnBridge.expression(c)))
     val itemGens: Seq[Gen] = spec.items match {
       case None => Nil
       case Some(Left(one)) =>
@@ -287,14 +293,18 @@ object SpecCompiler {
         //
         // Bounds peephole: higher-order functions (forall/filter) are
         // eval-only — they drop the check out of whole-stage codegen and
-        // box every element. For numeric bounds over non-nullable
-        // numeric elements, `forall(x >= lo)` ⇔ `size(c)=0 OR
-        // array_min(c) >= lo` (dually max), and array_min/array_max ARE
-        // codegen'd — so the hot-path pass stays fused; the HOF `filter`
-        // survives only in the offending-value rendering, which runs for
-        // failing rows alone. This is the dominant per-row cost of the
-        // fused validation pass on the primary (tokens array) input.
-        val aggRewritable = !nullableElems && isNumeric(et) &&
+        // box every element. array_min/array_max ARE codegen'd and skip
+        // null elements (NULL for an empty or all-null array), so for
+        // numeric bounds `forall(x IS NULL OR x >= lo)` ⇔
+        // `coalesce(array_min(c) >= lo, c IS NOT NULL)` (dually max) —
+        // for nullable and non-nullable elements alike (a NULL array
+        // yields false, the same verdict `forall`'s NULL resolves to).
+        // NaN sorts above every number in both the array_min ordering
+        // and the comparison, so float arrays agree too. The hot-path
+        // pass stays fused; the HOF `filter` survives only in the
+        // offending-value rendering, which runs for failing rows alone
+        // (a null element's comparison is NULL, so `filter` drops it).
+        val aggRewritable = isNumeric(et) &&
           (one.types == Seq(Left(SchemaType.SNumber)) ||
             (one.types == Seq(Left(SchemaType.SInteger)) && isIntegral(et)))
         val (aggGens, oneRest) =
@@ -304,26 +314,24 @@ object SpecCompiler {
             val minG = one.minimum.toSeq.map { m =>
               def ep(x: Column) = if (one.exclusiveMinimum) x > b(m) else x >= b(m)
               Gen(s"$path[*].minimum",
-                c => size(c) === 0 ||
-                  (if (one.exclusiveMinimum) array_min(c) > b(m) else array_min(c) >= b(m)),
+                c => coalesce(ep(array_min(c)), c.isNotNull),
                 c => to_json(filter(c, x => !ep(x))))
             }
             val maxG = one.maximum.toSeq.map { m =>
               def ep(x: Column) = if (one.exclusiveMaximum) x < b(m) else x <= b(m)
               Gen(s"$path[*].maximum",
-                c => size(c) === 0 ||
-                  (if (one.exclusiveMaximum) array_max(c) < b(m) else array_max(c) <= b(m)),
+                c => coalesce(ep(array_max(c)), c.isNotNull),
                 c => to_json(filter(c, x => !ep(x))))
             }
             (minG ++ maxG, one.copy(minimum = None, maximum = None))
           }
         val typeGen =
           if (nullableElems && rejectsNullElement(one))
-            Seq(Gen(s"$path[*].type",
-              c => forall(c, x => x.isNotNull),
-              _ => lit("null")))
+            Seq(Gen(s"$path[*].type", noNulls, _ => lit("null")))
           else Nil
-        aggGens ++ typeGen ++ valueGens(oneRest, et, s"$path[*]").map { g =>
+        // `[*].type` first: constraint order is the order of each row's
+        // violations, type before keyword checks
+        typeGen ++ aggGens ++ valueGens(oneRest, et, s"$path[*]").map { g =>
           val elemPass: Column => Column =
             if (nullableElems) x => x.isNull || notNullPass(g.pass(x))
             else x => notNullPass(g.pass(x))
@@ -360,9 +368,7 @@ object SpecCompiler {
           case Right(sub) =>
             val typeGen =
               if (nullableElems && rejectsNullElement(sub))
-                Seq(Gen(s"$path[*].type",
-                  c => forall(tail(c), x => x.isNotNull),
-                  _ => lit("null")))
+                Seq(Gen(s"$path[*].type", c => noNulls(tail(c)), _ => lit("null")))
               else Nil
             typeGen ++ valueGens(sub, et, s"$path[*]").map { g =>
               val elemPass: Column => Column =

@@ -3,7 +3,6 @@ package graft.engine
 import graft.spec.SchemaSpec
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
 
 /** Partition-granularity checkpointed validation runs — the Iceberg-style
   * commit/resume seam (SURVEY.md §7.1).
@@ -86,45 +85,25 @@ trait TableIO {
       s"${getClass.getName} does not implement writeValid; run without emitValid")
 }
 
-/** Partitioned-Parquet + manifest-directory [[TableIO]]: the in-sandbox
+/** Parquet-output + driver-side-manifest [[TableIO]]: the in-sandbox
   * stand-in for an Iceberg checkpoint table (no Iceberg runtime jar
-  * exists here, BASELINE.md). Violations and manifest rows each land
-  * under their own `part=<unitId>` directory with overwrite semantics —
-  * per-unit directories make concurrent commits of different units safe
-  * (no two Spark write jobs ever share an output directory or its
-  * `_temporary` staging) and re-commits idempotent.
+  * exists here, BASELINE.md). Violations (and valid rows) land under
+  * `violations/part=<unitId>` with Spark's overwrite semantics; per-unit
+  * directories make concurrent writes of different units safe (no two
+  * Spark write jobs ever share an output directory or its `_temporary`
+  * staging). The commit point is one `_manifest/commit-<unitId>.json`
+  * file published atomically by [[CommitFiles]]: no Spark job, and a
+  * unit is complete iff its file exists. The split descriptor is the
+  * `_manifest_split` file, published the same way.
   */
 final class ParquetManifestIO(spark: SparkSession, outDir: String) extends TableIO {
-  private val manifestDir = s"$outDir/_manifest"
-  private val splitFile = Paths.get(s"$outDir/_manifest_split")
+  private val files = new CommitFiles(spark, outDir)
 
-  override def completedUnits(): Set[String] =
-    if (!Files.exists(Paths.get(manifestDir))) Set.empty
-    else {
-      // an outDir from the pre-partitioned manifest layout has parquet
-      // files DIRECTLY under _manifest/ (flat Append commits); partition
-      // discovery over a mix of flat files and part=<id> subdirectories
-      // is undefined, so fail loudly instead of resuming wrong
-      val s = Files.list(Paths.get(manifestDir))
-      val legacyFlat =
-        try s.anyMatch(p => Files.isRegularFile(p) &&
-          p.getFileName.toString.endsWith(".parquet"))
-        finally s.close()
-      require(!legacyFlat,
-        s"$manifestDir uses the legacy flat manifest layout (parquet files " +
-          "directly under _manifest/); this version commits one " +
-          "part=<unitId> directory per unit — re-run into a fresh outDir")
-      val df = spark.read.option("basePath", manifestDir).parquet(manifestDir)
-      df.select("partition").collect().map(_.getString(0)).toSet
-    }
+  override def completedUnits(): Set[String] = files.committed("_manifest")
 
-  override def splitDescriptor(): Option[String] =
-    if (Files.exists(splitFile)) Some(Files.readString(splitFile)) else None
+  override def splitDescriptor(): Option[String] = files.get("_manifest_split")
 
-  override def writeSplitDescriptor(desc: String): Unit = {
-    Files.createDirectories(Paths.get(outDir))
-    Files.writeString(splitFile, desc)
-  }
+  override def writeSplitDescriptor(desc: String): Unit = files.put("_manifest_split", desc)
 
   override def writeViolations(unitId: String, violations: DataFrame): Unit =
     violations.write.mode(SaveMode.Overwrite).parquet(s"$outDir/violations/part=$unitId")
@@ -133,10 +112,11 @@ final class ParquetManifestIO(spark: SparkSession, outDir: String) extends Table
     rows.write.mode(SaveMode.Overwrite).parquet(s"$outDir/valid/part=$unitId")
 
   override def commit(res: PartitionResult, at: java.time.Instant): Unit = {
-    import spark.implicits._
-    Seq((res.partition, res.nRows, res.nFailed, res.nViolations, at.toString))
-      .toDF("partition", "n_rows", "n_failed", "n_violations", "committed_at")
-      .write.mode(SaveMode.Overwrite).parquet(s"$manifestDir/part=${res.partition}")
+    import org.json4s.JsonDSL._
+    files.commit("_manifest", res.partition, org.json4s.jackson.JsonMethods.compact(
+      ("partition" -> res.partition) ~ ("n_rows" -> res.nRows) ~
+        ("n_failed" -> res.nFailed) ~ ("n_violations" -> res.nViolations) ~
+        ("committed_at" -> at.toString)))
   }
 }
 
@@ -203,9 +183,12 @@ final class CheckpointRunner(spark: SparkSession, io: TableIO) {
       case None => io.writeSplitDescriptor(splitDescriptor(split))
     }
     val done = io.completedUnits()
-    // partition listing: distinct is over the (tiny) partition-key domain
-    val parts = df.select(partCol).distinct().collect()
-      .map(r => Option(r.getString(0)).getOrElse("__null__")).sorted
+    // partition listing: from the file index when it holds the values,
+    // else a distinct job over the (tiny) partition-key domain
+    val parts = CheckpointRunner.fileIndexPartitions(df, partCol).getOrElse(
+      df.select(partCol).distinct().collect()
+        .map(r => Option(r.getString(0)).getOrElse(CheckpointRunner.NullUnit)).toSeq)
+      .sorted
 
     /** Sub-unit ids and their key-slice predicates for one partition. */
     def subUnits: Seq[(String, Option[org.apache.spark.sql.Column])] = split match {
@@ -233,7 +216,7 @@ final class CheckpointRunner(spark: SparkSession, io: TableIO) {
     def runUnit(unitId: String, p: String,
         pred: Option[org.apache.spark.sql.Column]): PartitionResult = {
       val partSlice =
-        if (p == "__null__") df.where(col(partCol).isNull)
+        if (p == CheckpointRunner.NullUnit) df.where(col(partCol).isNull)
         else df.where(col(partCol) === p) // partition pruning when the
                                           // source layout is partitioned
       val slice0 = pred.fold(partSlice)(partSlice.where)
@@ -292,6 +275,40 @@ final class CheckpointRunner(spark: SparkSession, io: TableIO) {
         }
         futures.map(Await.result(_, Duration.Inf))
       } finally pool.shutdown()
+    }
+  }
+}
+
+object CheckpointRunner {
+
+  /** The unit of rows whose partition value is null. */
+  val NullUnit = "__null__"
+
+  /** The `partCol` values of `df` as its file index lists them, when
+    * `df` is a bare file relation (`spark.read.parquet(dir)`) partitioned
+    * by a string column `partCol`. Spark listed the partition directories
+    * when it created the relation, so this reads driver memory and starts
+    * no job. `__HIVE_DEFAULT_PARTITION__` reads back as null and maps to
+    * [[NullUnit]], as in the `distinct` job. A partition directory whose
+    * files hold zero rows is still listed: its unit commits `n_rows = 0`
+    * where the `distinct` job would have skipped it. None for every other
+    * frame (generated, JSONL, filtered or projected ones), whose values
+    * need the `distinct` job.
+    */
+  private[engine] def fileIndexPartitions(df: DataFrame, partCol: String): Option[Seq[String]] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    df.queryExecution.analyzed match {
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation =>
+          val resolver = org.apache.spark.sql.internal.SQLConf.get.resolver
+          val i = h.partitionSchema.fieldNames.indexWhere(resolver(_, partCol))
+          if (i < 0 || h.partitionSchema(i).dataType != org.apache.spark.sql.types.StringType) None
+          else Some(h.location.listFiles(Nil, Nil).filter(_.files.nonEmpty).map { d =>
+            if (d.values.isNullAt(i)) NullUnit else d.values.getUTF8String(i).toString
+          }.distinct)
+        case _ => None
+      }
+      case _ => None
     }
   }
 }

@@ -3,8 +3,8 @@ package graft.engine
 import graft.spec.SchemaSpec
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{
-  CreateNamedStruct, Expression, LambdaFunction, LeafExpression,
-  Literal, NamedLambdaVariable, ScalaUDF, Unevaluable}
+  ArrayForAll, CreateNamedStruct, Expression, IsNotNull, LambdaFunction,
+  LeafExpression, Literal, NamedLambdaVariable, ScalaUDF, Unevaluable}
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
 import org.apache.spark.sql.types._
@@ -30,7 +30,11 @@ import org.apache.spark.sql.types._
   * and the compiler's one UDF (the `format:"regex"` check → the
   * registered name `graft_is_valid_regex`; [[graft.GraftFunctions
   * .register]] installs it — sessions without it can run every spec
-  * that has no `format` keyword).
+  * that has no `format` keyword and no divisor beyond DecimalType(38,18),
+  * which renders as the registered `graft_divisible_by`). The
+  * [[graft.compile.NoNullElements]] kernel renders as its builtin
+  * equivalent `forall(a, e -> e IS NOT NULL)`, so item checks over
+  * nullable-element arrays need no registration.
   */
 object SqlGen {
 
@@ -68,6 +72,11 @@ object SqlGen {
         .getOrElse(throw new IllegalArgumentException(
           s"unknown UDF in compiled constraints: cannot emit SQL for ${u}"))
       s"${entry.sqlName}(${u.children.map(render).mkString(", ")})"
+    case graft.compile.NoNullElements(a) =>
+      // the builtin form, so the artifact needs no registered function
+      val v = NamedLambdaVariable("e", a.dataType.asInstanceOf[ArrayType].elementType,
+        nullable = true)
+      render(ArrayForAll(a, LambdaFunction(IsNotNull(v), Seq(v))))
     case l: Literal => renderLiteral(l.value, l.dataType)
     case leaf if leaf.children.isEmpty => leaf.sql
     case other =>

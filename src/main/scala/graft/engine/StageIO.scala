@@ -1,7 +1,6 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import java.nio.file.{Files, Paths}
 
 /** Stage-granularity commit/resume seam for composed pipelines — the
   * assembly-pipeline face of the Iceberg checkpoint contract that
@@ -49,28 +48,26 @@ trait StageIO {
   def stageScalars(name: String): Map[String, Long]
 }
 
-/** Parquet + manifest-directory [[StageIO]] — the in-sandbox stand-in
-  * for an Iceberg checkpoint table, mirroring [[ParquetManifestIO]]'s
-  * layout discipline: stage data under `dir/stage=<name>`, manifest
-  * rows under `dir/_stages/part=<name>` (per-stage directories make
-  * re-commits idempotent and never share a `_temporary` staging dir).
+/** Parquet + driver-side-manifest [[StageIO]] — the in-sandbox stand-in
+  * for an Iceberg checkpoint table, mirroring [[ParquetManifestIO]]:
+  * stage data under `dir/stage=<name>`, the commit point one
+  * `dir/_stages/commit-<name>.json` file carrying the stage's scalars
+  * (`{"stage": name, "scalars": {key: value}}`), and the run descriptor
+  * the `dir/_run_descriptor` file — all published atomically by
+  * [[CommitFiles]], so listing, reading and committing stages start no
+  * Spark job.
   */
 final class ParquetStageIO(spark: SparkSession, val dir: String) extends StageIO {
-  private val manifestDir = s"$dir/_stages"
-  private val descFile = Paths.get(s"$dir/_run_descriptor")
+  import org.json4s._
+  import org.json4s.jackson.JsonMethods.{compact, parse}
 
-  override def completedStages(): Set[String] =
-    if (!Files.exists(Paths.get(manifestDir))) Set.empty
-    else spark.read.option("basePath", manifestDir).parquet(manifestDir)
-      .select("stage").distinct().collect().map(_.getString(0)).toSet
+  private val files = new CommitFiles(spark, dir)
 
-  override def runDescriptor(): Option[String] =
-    if (Files.exists(descFile)) Some(Files.readString(descFile)) else None
+  override def completedStages(): Set[String] = files.committed("_stages")
 
-  override def writeRunDescriptor(desc: String): Unit = {
-    Files.createDirectories(Paths.get(dir))
-    Files.writeString(descFile, desc)
-  }
+  override def runDescriptor(): Option[String] = files.get("_run_descriptor")
+
+  override def writeRunDescriptor(desc: String): Unit = files.put("_run_descriptor", desc)
 
   override def writeStage(name: String, df: DataFrame): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(s"$dir/stage=$name")
@@ -78,15 +75,15 @@ final class ParquetStageIO(spark: SparkSession, val dir: String) extends StageIO
   override def readStage(name: String): DataFrame =
     spark.read.parquet(s"$dir/stage=$name")
 
-  override def commitStage(name: String, scalars: Map[String, Long]): Unit = {
-    import spark.implicits._
-    scalars.toSeq.sorted.map { case (k, v) => (name, k, v) }
-      .toDF("stage", "key", "value")
-      .write.mode(SaveMode.Overwrite).parquet(s"$manifestDir/part=$name")
-  }
+  override def commitStage(name: String, scalars: Map[String, Long]): Unit =
+    files.commit("_stages", name, compact(JObject(
+      "stage" -> JString(name),
+      "scalars" -> JObject(scalars.toList.sorted.map { case (k, v) => k -> JLong(v) }))))
 
-  override def stageScalars(name: String): Map[String, Long] =
-    spark.read.parquet(s"$manifestDir/part=$name")
-      .select("key", "value").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+  override def stageScalars(name: String): Map[String, Long] = {
+    implicit val formats: Formats = DefaultFormats
+    val body = files.entry("_stages", name).getOrElse(
+      throw new IllegalStateException(s"stage '$name' is not committed in $dir"))
+    (parse(body) \ "scalars").extract[Map[String, Long]]
+  }
 }
