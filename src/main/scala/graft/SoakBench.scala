@@ -176,16 +176,6 @@ object SoakBench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // SPARK_GRAFT_SOAK_CONF="k=v,k=v" — session confs for knob soaks
-    // (e.g. the graft.dedup.* hot-detection settings), applied before
-    // any lane runs so routing decisions see them
-    sys.env.get("SPARK_GRAFT_SOAK_CONF").foreach(_.split(",").filter(_.nonEmpty)
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        println(s"""{"soak_conf":"$k=$v"}""")
-        spark.conf.set(k, v)
-      })
-
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(data)))
       corpus(spark, rows, poolSize).write.mode("overwrite").parquet(data)
     val docs = spark.read.parquet(data)

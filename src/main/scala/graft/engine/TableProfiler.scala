@@ -15,8 +15,7 @@ import org.apache.spark.sql.types._
 object TableProfiler {
 
   /** `(column, n, n_null, null_rate, min, max, approx_distinct)` — one row
-    * per atomic column; array columns report element min/max and length
-    * stats via [[arrayProfile]].
+    * per atomic column.
     */
   def profile(df: DataFrame, relSd: Double = 0.05): DataFrame = {
     val atomic = df.schema.fields.filter(f => isAtomic(f.dataType))
@@ -49,25 +48,6 @@ object TableProfiler {
         col("s.min").as("min"),
         col("s.max").as("max"),
         col("s.approx_distinct").as("approx_distinct"))
-  }
-
-  /** Stats of an array<numeric> column: length min/max/avg and global
-    * element min/max — per-row `size`/`array_min`/`array_max` pre-reduce
-    * so the aggregation sees scalars, not arrays.
-    */
-  def arrayProfile(df: DataFrame, arrCol: String): DataFrame = {
-    val c = col(arrCol)
-    df.select(
-        size(c).as("_len"),
-        array_min(c).as("_emin"),
-        array_max(c).as("_emax"))
-      .agg(
-        count(lit(1)).as("n"),
-        min(col("_len")).as("min_len"),
-        max(col("_len")).as("max_len"),
-        round(avg(col("_len")), 6).as("avg_len"),
-        min(col("_emin")).as("min_element"),
-        max(col("_emax")).as("max_element"))
   }
 
   /** Grouped quantiles of a numeric column (linear interpolation at

@@ -220,13 +220,6 @@ object ValidationEngine {
     */
   private[engine] def prefilterIsCheap(annotated: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.catalyst.plans.logical.Project
-    val validExpr = annotated.queryExecution.analyzed.collectFirst {
-      case p: Project if p.projectList.exists {
-            case a: Alias => a.name == PassCol; case _ => false } =>
-        p.projectList.collectFirst {
-          case a: Alias if a.name == PassCol => a.child }
-    }.flatten
     def cheap(e: Expression): Boolean = (e match {
       case _: Attribute | _: Literal => true
       case _: And | _: Or | _: Not => true
@@ -247,24 +240,30 @@ object ValidationEngine {
                                                        // walks, parses, UDFs,
                                                        // custom kernels, …
     }) && e.children.forall(cheap)
-    validExpr.exists(cheap)
+    validExpr(annotated).exists(cheap)
   }
 
-  /** Diagnostic: the `valid` alias expression and its first
-    * non-whitelisted node, for strategy-spec failures.
+  /** The expression behind the `valid` alias of an annotated frame's
+    * analyzed plan, if any.
     */
-  private[engine] def debugValidExpr(annotated: DataFrame): String = {
-    import org.apache.spark.sql.catalyst.expressions._
+  private def validExpr(annotated: DataFrame)
+      : Option[org.apache.spark.sql.catalyst.expressions.Expression] = {
+    import org.apache.spark.sql.catalyst.expressions.Alias
     import org.apache.spark.sql.catalyst.plans.logical.Project
-    val validExpr = annotated.queryExecution.analyzed.collectFirst {
+    annotated.queryExecution.analyzed.collectFirst {
       case p: Project if p.projectList.exists {
             case a: Alias => a.name == PassCol; case _ => false } =>
         p.projectList.collectFirst {
           case a: Alias if a.name == PassCol => a.child }
     }.flatten
-    validExpr.fold("NO valid ALIAS FOUND")(e =>
-      s"valid = $e\nnode classes: ${e.collect { case x => x.getClass.getSimpleName }.distinct.mkString(", ")}")
   }
+
+  /** Diagnostic: the `valid` alias expression and its first
+    * non-whitelisted node, for strategy-spec failures.
+    */
+  private[engine] def debugValidExpr(annotated: DataFrame): String =
+    validExpr(annotated).fold("NO valid ALIAS FOUND")(e =>
+      s"valid = $e\nnode classes: ${e.collect { case x => x.getClass.getSimpleName }.distinct.mkString(", ")}")
 
   /** Violations from an already-annotated frame (or any custom
     * constraint set via [[annotateWith]]).

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines: exact,
@@ -19,62 +19,24 @@ object Dedup {
 
   private val obsId = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Salt fan-out of [[attachDupGroups]]: a content fingerprint hotter
-    * than ~task-size spreads over this many (fingerprint, salt) slices.
-    * Default for [[OccSaltsKey]].
+  // ---- routing thresholds. Each picks a plan from sizes and counts the
+  // operator measures itself; every route yields the same rows. ----
+
+  /** Salt fan-out of [[attachDupGroups]] (a power of two): a content
+    * fingerprint hotter than ~task-size spreads over this many
+    * (fingerprint, salt) slices.
     */
-  val OccSalts = 64
+  private val OccSalts = 64
 
   /** Hot-vocabulary detection sample rate for [[attachDupGroups]]:
-    * 1-in-this docs are counted; see the scaling-rule note there.
-    * Default for [[HotSampleModKey]].
-    */
-  val HotSampleMod = 1024L
-
-  // ---- scale-tuning session confs (defaults = the proven bench/soak
-  // values; every dedup entry point resolves them per call, so a 10^12
-  // deployment tunes via `spark.conf.set` without an API change) ----
-
-  /** Conf key for [[HotSampleMod]]. The scaling rule (attachDupGroups
+    * 1-in-this docs are counted. The scaling rule (attachDupGroups
     * scaladoc): |hot vocab| ≤ N/(HotSampledMin·HotSampleMod) must fit a
     * broadcast while undetected groups (≲ a few × HotSampleMod rows)
-    * must fit a window partition — at N = 10^12 set this to 10^5-10^6
-    * (hot vocab ≤ ~3×10^4 keys, undetected groups ≤ a few million
-    * rows), vs the default 1024 that is right for ≤10^9-row corpora.
+    * must fit a window partition. 1024 is right for ≤10^9-row corpora;
+    * N = 10^12 would need 10^5-10^6 (hot vocab ≤ ~3×10^4 keys,
+    * undetected groups ≤ a few million rows).
     */
-  val HotSampleModKey = "spark.graft.dedup.hotSampleMod"
-
-  /** Conf key for [[HotSampledMin]] (sampled-occurrence hot threshold). */
-  val HotSampledMinKey = "spark.graft.dedup.hotSampledMin"
-
-  /** Conf key for [[OccSalts]] (hot-key salt fan-out; power of two). */
-  val OccSaltsKey = "spark.graft.dedup.occSalts"
-
-  /** Conf key: inputs whose LEAF-scan size estimate is at or below this
-    * many bytes skip the hot-vocabulary sample job entirely and compile
-    * the plain single-window plan — the probe is a strategy choice, not
-    * a correctness gate (both routes are exact), and at small input no
-    * key can be hot. Derivation of the 4 MiB default: occurrence rows ≤
-    * ~2× compressed input bytes (worst case: one rolling gram per ~5-
-    * byte word at 10× text compression), so the worst single window
-    * partition is ≤ ~8M rows — under the 10M-row single-task window the
-    * round-4 soaks proved cliff-free. Raise only with that proof in
-    * hand; set 0 to always probe (tests do).
-    */
-  val ProbeMinBytesKey = "spark.graft.dedup.probeMinBytes"
-
-  /** Default for [[ProbeMinBytesKey]]. */
-  val ProbeMinBytesDefault: Long = 4L << 20
-
-  private def confLong(df: DataFrame, key: String, dflt: Long): Long =
-    df.sparkSession.conf.get(key, dflt.toString).toLong
-
-  /** Total size estimate (bytes) of a plan's leaf relations — file sizes
-    * for parquet scans. Driver-only (no job): used to SKIP defensive
-    * machinery that only matters at scale. Routing only, never results.
-    */
-  private[ops] def leafInputBytes(df: DataFrame): BigInt =
-    df.queryExecution.optimizedPlan.collectLeaves().map(_.stats.sizeInBytes).sum
+  private val HotSampleMod = 1024L
 
   /** Sampled-occurrence threshold above which a fingerprint is routed
     * through the salted hot path (≥ 32 at 1/1024 sampling ⇒ true df
@@ -87,121 +49,174 @@ object Dedup {
     * df ≈ 2k). The threshold only needs to sit well under task scale
     * (~N/cores rows) while staying well over sampling noise.
     */
-  val HotSampledMin = 32L
+  private val HotSampledMin = 32L
 
-  /** Row-count ceiling for the incremental probes' broadcast of the
-    * batch's distinct key set. The daily-ingest contract says increments
-    * are small; this makes the contract ENFORCED instead of narrated — a
-    * corpus-sized "batch" falls back to a shuffle semi join (same
-    * output) rather than a driver OOM. ~4M 16-byte keys ≈ 64 MB, inside
-    * a default driver heap with room to spare.
+  /** Inputs whose LEAF-scan size estimate is at or below this many
+    * bytes skip the hot-vocabulary sample job entirely and compile the
+    * plain single-window plan — the probe is a strategy choice, not a
+    * correctness gate (both routes are exact), and at small input no
+    * key can be hot. Derivation of 4 MiB: occurrence rows ≤ ~2×
+    * compressed input bytes (worst case: one rolling gram per ~5-byte
+    * word at 10× text compression), so the worst single window
+    * partition is ≤ ~8M rows — under the 10M-row single-task window the
+    * round-4 soaks proved cliff-free. Raise only with that proof in
+    * hand.
     */
-  val MaxBroadcastKeys = 4000000L
+  private val ProbeMinBytes: Long = 4L << 20
 
-  /** Broadcast-when-small semi-join guard shared by the incremental
-    * probes: LEFT SEMI of `big` against `keys`, broadcasting the key set
-    * only below [[MaxBroadcastKeys]] rows (the count is one action over
-    * the already-small batch side). Above it, the plain join lets Spark
-    * plan a shuffle semi join — identical output, no driver collect.
+  /** Row-count ceiling for broadcasting a distinct key set (the
+    * incremental probes' batch keys, decontamination's eval keys). The
+    * daily-ingest contract says increments are small; this makes the
+    * contract ENFORCED instead of narrated — a corpus-sized "batch"
+    * falls back to a shuffle semi join (same output) rather than a
+    * driver OOM. ~4M 16-byte keys ≈ 64 MB, inside a default driver heap
+    * with room to spare.
     */
-  private[ops] def semiJoinSmall(big: DataFrame, keys: DataFrame,
-      on: Seq[String], maxBroadcastKeys: Long): DataFrame =
-    if (keys.count() <= maxBroadcastKeys) big.join(broadcast(keys), on, "left_semi")
-    else big.join(keys, on, "left_semi")
+  private val MaxBroadcastKeys = 4000000L
 
-  /** Conf key: distinct-key ceiling for the incremental probes' LOCAL
-    * key-set shortcut. At or under this many distinct batch keys, the
-    * single probe job collects the key set itself (bounded by a LIMIT of
-    * ceiling+1, so the driver never holds more than ceiling+1 rows) and
-    * the probe side becomes a LocalRelation — the broadcast-exchange
-    * subtree that recomputed the batch kernel a second time disappears
-    * from the plan entirely. Above it, the two-job form takes over:
-    * count+buckets aggregation, then broadcast under
-    * [[MaxBroadcastKeys]] / shuffle semi beyond — identical output at
-    * every tier. Default 65,536 keys ≈ 1-4 MB collected.
+  /** Distinct-key ceiling for the incremental probes' LOCAL key-set
+    * tier. At or under this many distinct batch keys, the single probe
+    * job collects the key set itself (bounded by a LIMIT of ceiling+1,
+    * so the driver never holds more than ceiling+1 rows) and the probe
+    * side becomes a LocalRelation — the broadcast-exchange subtree that
+    * recomputed the batch kernel a second time disappears from the plan
+    * entirely. Above it, a second aggregation job counts the keys and
+    * lists their buckets, and the [[MaxBroadcastKeys]] gate picks
+    * broadcast or shuffle semi — identical output at every tier.
+    * 65,536 keys ≈ 1-4 MB collected.
     */
-  val LocalProbeKeysMaxKey = "spark.graft.dedup.localProbeKeysMax"
+  private val LocalProbeKeysMax = 65536L
 
-  /** Default for [[LocalProbeKeysMaxKey]]. */
-  val LocalProbeKeysMaxDefault: Long = 65536L
-
-  /** The incremental probes' eager driver work over the batch's distinct
-    * `(key..., _pb)` rows (`_pb` is a function of the key columns, so
-    * distinct tuples ≡ distinct keys). Returns the pruning bucket list
-    * and, when the batch is small enough, the collected key rows for a
-    * LocalRelation probe side:
-    *
-    *   - ≤ localMax distinct keys (ONE job, LIMIT-bounded): `Some(rows)`
-    *     plus the bucket list derived from them — the common daily-
-    *     ingest case, and the only tier bench-scale inputs ever hit.
-    *   - above: `None` with the bucket list and exact key count from a
-    *     second aggregation job — the pre-existing guarded shape.
-    */
-  private def probeStats(distinctKeyPb: DataFrame):
-      (Option[Array[org.apache.spark.sql.Row]], Seq[Long], Long) = {
-    val localMax = confLong(distinctKeyPb, LocalProbeKeysMaxKey,
-      LocalProbeKeysMaxDefault)
-    val head = distinctKeyPb
-      .limit(math.min(localMax + 1, Int.MaxValue.toLong).toInt).collect()
-    if (head.length <= localMax) {
-      val pbIdx = head.headOption.map(_.fieldIndex("_pb")).getOrElse(0)
-      (Some(head), head.map(_.getLong(pbIdx)).distinct.toSeq, head.length.toLong)
-    } else {
-      val r = distinctKeyPb
-        .agg(count(lit(1)).as("_nk"), collect_set(col("_pb")).as("_pbs"))
-        .collect()(0)
-      (None, r.getSeq[Long](1), r.getLong(0))
-    }
-  }
-
-  /** Conf key: partition-path count up to which an index read lists its
-    * bucket directories ON THE DRIVER instead of through Spark's
+  /** Partition-path count up to which an index read lists its bucket
+    * directories ON THE DRIVER instead of through Spark's
     * parallel-partition-discovery JOB. Spark's default threshold (32)
     * launches one distributed listing job per `spark.read` once an index
     * has more than 32 bucket dirs — measured 0.5 s of pure scheduling
     * per probe against a local-FS 256-bucket index, vs milliseconds of
-    * driver `listStatus` (DiagIncr, round 6). The knob keeps the
-    * TRADEOFF scale-correct: an index with more paths than this still
-    * gets the parallel job (the right call at 2^20 buckets on an object
-    * store); deployments on high-latency stores can lower it back
-    * toward Spark's 32.
+    * driver `listStatus` (round 6). An index with more paths than this
+    * still gets the parallel job (the right call at 2^20 buckets on an
+    * object store).
     */
-  val IndexSeqListingPathsKey = "spark.graft.index.seqListingPaths"
+  private val IndexSeqListingPaths = 4096L
 
-  /** Default for [[IndexSeqListingPathsKey]]. */
-  val IndexSeqListingPathsDefault: Long = 4096L
-
-  /** Read a bucket-partitioned index directory with the sequential-
-    * listing threshold applied (restored after resolution — listing
-    * happens eagerly inside `spark.read.parquet`).
+  /** Edge-count bound for [[connectedComponents]]' local fast path. A
+    * pair graph at or under this many edges (known exactly — the edges
+    * are materialized and counted before the choice) is solved by
+    * driver-side union-find in one collect instead of O(log d) rounds of
+    * 2 distributed joins + a count each: LSH pair graphs at bench scale
+    * are thousands of edges, where the iterative form is pure scheduling
+    * overhead (~1 s measured round 6), while the driver cost is bounded
+    * at ~32 MB of edge rows. Identical labels by construction — both
+    * forms assign every node the component minimum.
     */
-  private def readIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    val old = spark.conf.get(key)
-    spark.conf.set(key,
-      spark.conf.get(IndexSeqListingPathsKey,
-        IndexSeqListingPathsDefault.toString))
-    try spark.read.parquet(path) finally spark.conf.set(key, old)
+  private val CcMaxLocalEdges = 1000000L
+
+  /** Round cap of the iterative [[connectedComponents]]: pointer jumping
+    * converges in O(log diameter) rounds, so 50 is never reached by a
+    * real pair graph; hitting it fails loudly instead of looping.
+    */
+  private val CcMaxRounds = 50
+
+  /** Eval-set inputs whose leaf-scan size estimate is at or below this
+    * many bytes broadcast their distinct shingle/gram set WITHOUT a
+    * count job (the "eval benchmarks are small" contract honored for
+    * free). Above it, one count job feeds the [[MaxBroadcastKeys]]
+    * gate: broadcast under it, shuffle semi beyond — identical output,
+    * never a driver OOM. 16 MiB: ≤ ~160 MB raw text at 10× compression
+    * → ≤ ~32M grams → ≤ ~256 MB broadcast worst case, inside executor
+    * budgets; real eval sets are orders of magnitude under it,
+    * corpus-sized "benchmarks" are orders over.
+    */
+  private val DeconBenchMaxBytes: Long = 16L << 20
+
+  /** The count-gated thresholds as one value. Every public operator runs
+    * `Tiers()`, the constants above; OpsSpec lowers them through the
+    * `private[ops]` `*At` forms to reach each tier on small inputs.
+    */
+  private[ops] final case class Tiers(
+      localProbeKeys: Long = LocalProbeKeysMax,
+      broadcastKeys: Long = MaxBroadcastKeys,
+      deconBenchBytes: Long = DeconBenchMaxBytes,
+      ccLocalEdges: Long = CcMaxLocalEdges)
+
+  /** Total size estimate (bytes) of a plan's leaf relations — file sizes
+    * for parquet scans. Driver-only (no job): used to SKIP defensive
+    * machinery that only matters at scale. Routing only, never results.
+    */
+  private def leafInputBytes(df: DataFrame): BigInt =
+    df.queryExecution.optimizedPlan.collectLeaves().map(_.stats.sizeInBytes).sum
+
+  /** The one broadcast gate: broadcast a distinct key set of `nKeys`
+    * rows while it is under [[MaxBroadcastKeys]]; past it, the plain
+    * frame lets Spark plan a shuffle join — identical output, no driver
+    * collect.
+    */
+  private def broadcastIfFew(keys: DataFrame, nKeys: Long, tiers: Tiers): DataFrame =
+    if (nKeys <= tiers.broadcastKeys) broadcast(keys) else keys
+
+  /** The index side of an incremental probe: the rows of the
+    * bucket-partitioned index at `indexPath` whose key columns match a
+    * key of `batchKeys` — the batch's `(key..., _pb)` rows, duplicates
+    * allowed (`_pb` is a function of the key columns, so distinct tuples
+    * ≡ distinct keys). Returns those rows and the batch's distinct key
+    * count, for callers that gate their own joins the same way.
+    *
+    * The eager driver work is ONE job in the common tier:
+    *   - ≤ [[LocalProbeKeysMax]] distinct keys (LIMIT-bounded collect):
+    *     the collected rows give the pruning bucket list and become a
+    *     LocalRelation probe side — the daily-ingest case, and the only
+    *     tier bench-scale inputs ever hit.
+    *   - above: a second aggregation job returns the exact key count and
+    *     the bucket list, and the probe side is the distributed distinct
+    *     key plan, broadcast or shuffled by [[broadcastIfFew]].
+    * The index read keeps only the batch's buckets (`_pb IN (…)`, pruned
+    * at storage level) and any `indexFilter`, then LEFT SEMI joins the
+    * probe side.
+    */
+  private def probeIndex(spark: SparkSession, indexPath: String,
+      batchKeys: DataFrame, tiers: Tiers,
+      indexFilter: Option[Column] = None): (DataFrame, Long) = {
+    val keyCols = batchKeys.columns.filter(_ != "_pb").toSeq
+    val keys = batchKeys.select(keyCols.map(col): _*)
+    val distinctKeyPb = batchKeys.distinct()
+    val head = distinctKeyPb
+      .limit(math.min(tiers.localProbeKeys + 1, Int.MaxValue.toLong).toInt).collect()
+    val (side, pbs, nKeys) =
+      if (head.length <= tiers.localProbeKeys) {
+        import scala.jdk.CollectionConverters._
+        val rows = head.toSeq.map(r => Row.fromSeq(keyCols.map(r.getAs[Any])))
+        (spark.createDataFrame(rows.asJava, keys.schema),
+          head.map(_.getAs[Long]("_pb")).distinct.toSeq, head.length.toLong)
+      } else {
+        val r = distinctKeyPb
+          .agg(count(lit(1)).as("_nk"), collect_set(col("_pb")).as("_pbs"))
+          .collect()(0)
+        (keys.distinct(), r.getSeq[Long](1), r.getLong(0))
+      }
+    val pruned = readIndex(spark, indexPath)
+      .where(col("_pb").cast("long").isin(pbs: _*)) // partition pruning
+    val index = indexFilter.fold(pruned)(pruned.where)
+    (index.join(broadcastIfFew(side, nKeys, tiers), keyCols, "left_semi"), nKeys)
   }
 
-  /** The probe side as a DataFrame: a LocalRelation of the collected
-    * key rows (minus `_pb`) when [[probeStats]] returned them, else the
-    * distributed `fallback` plan.
+  private val listingLock = new Object
+
+  /** Read a bucket-partitioned index directory with the sequential-
+    * listing threshold [[IndexSeqListingPaths]] applied. Listing happens
+    * eagerly inside `spark.read.parquet`, so the session conf is set for
+    * that call only and then restored — unset again if it was unset.
+    * The save/set/read/restore runs under one lock, so concurrent probes
+    * cannot interleave and leave the session changed.
     */
-  private def probeSide(spark: org.apache.spark.sql.SparkSession,
-      local: Option[Array[org.apache.spark.sql.Row]],
-      schema: org.apache.spark.sql.types.StructType,
-      fallback: => DataFrame): DataFrame =
-    local match {
-      case Some(rows) =>
-        import scala.jdk.CollectionConverters._
-        val keep = schema.fieldNames.toSeq
-        spark.createDataFrame(
-          rows.toSeq.map(r =>
-            org.apache.spark.sql.Row.fromSeq(keep.map(f => r.get(r.fieldIndex(f))))).asJava,
-          schema)
-      case None => fallback
+  private def readIndex(spark: SparkSession, path: String): DataFrame =
+    listingLock.synchronized {
+      val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+      // getAll holds only keys set explicitly; getOption would return
+      // Spark's default for an unset key
+      val old = spark.conf.getAll.get(key)
+      spark.conf.set(key, IndexSeqListingPaths)
+      try spark.read.parquet(path)
+      finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     }
 
   /** Skew-safe replacement for `agg(...) OVER (PARTITION BY hCol)` on a
@@ -290,13 +305,6 @@ object Dedup {
   private def attachDupGroups(rows: DataFrame, hCol: String, saltCol: Column,
       orderCols: Seq[String], joinType: String,
       sizeBoundOn: Option[DataFrame] = None): DataFrame = {
-    // scale knobs resolved per call from the session conf (defaults =
-    // the proven constants; see the conf-key scaladocs and the scaling
-    // rule below) — routing only, results identical at any setting
-    val hotSampleMod = confLong(rows, HotSampleModKey, HotSampleMod)
-    val hotSampledMin = confLong(rows, HotSampledMinKey, HotSampledMin)
-    val nSalts = confLong(rows, OccSaltsKey, OccSalts.toLong).toInt
-    val probeMinBytes = confLong(rows, ProbeMinBytesKey, ProbeMinBytesDefault)
     val payloadCols = (orderCols ++
       rows.columns.filterNot(c => c == hCol || orderCols.contains(c)))
       .map(col).toIndexedSeq
@@ -318,18 +326,16 @@ object Dedup {
         if (fields.size == 1) min(fields.head) else min(struct(fields: _*))
       }
     }
-    require(Integer.bitCount(nSalts) == 1, s"nSalts must be a power of two: $nSalts")
-
     // the deterministic doc sample (hash, not rand(): reproducible and
     // partitioning-invariant); the predicate references only saltCol,
     // so Catalyst pushes it below the caller's Generate/Project and the
     // kernel runs on the sliver, not the corpus
     val hotV = rows
-      .where(pmod(xxhash64(saltCol), lit(hotSampleMod)) === 0L)
+      .where(pmod(xxhash64(saltCol), lit(HotSampleMod)) === 0L)
       .where(col(hCol).isNotNull)
       .groupBy(col(hCol))
       .agg(count(lit(1)).as("_shc"))
-      .where(col("_shc") >= hotSampledMin)
+      .where(col("_shc") >= HotSampledMin)
       .select(col(hCol), lit(true).as("_hot"))
 
     val base = rows.where(col(hCol).isNotNull)
@@ -339,16 +345,12 @@ object Dedup {
     // + aggregation). The common case — no hot vocabulary — must pay
     // ZERO plan overhead, not a defensive salting tax; the repo
     // precedent is the analyzed-plan violations strategy in
-    // ValidationEngine. `-Dgraft.dedup.forceCold=true` is a TEST-ONLY
-    // override that pins the window plan regardless — SoakBench's
-    // negative control, proving its skew gate fires on the unsalted
-    // form of a mega-hot corpus. Small inputs (leaf-scan estimate ≤
-    // probeMinBytes) skip the probe JOB too and compile the window plan
+    // ValidationEngine. Small inputs (leaf-scan estimate ≤
+    // ProbeMinBytes) skip the probe JOB too and compile the window plan
     // directly: no key of a small corpus can reach task scale, so the
     // sample job would be pure fixed overhead (~0.2-0.3 s per attach
     // site at bench scale — measured round 6) for a foregone answer.
-    val anyHot = !java.lang.Boolean.getBoolean("graft.dedup.forceCold") &&
-      leafInputBytes(sizeBoundOn.getOrElse(rows)) > probeMinBytes &&
+    val anyHot = leafInputBytes(sizeBoundOn.getOrElse(rows)) > ProbeMinBytes &&
       !hotV.isEmpty
 
     val attached =
@@ -366,12 +368,12 @@ object Dedup {
           .join(broadcast(hotV), Seq(hCol), "left")
           .withColumn("_salt",
             when(col("_hot"),
-              xxhash64(saltCol).bitwiseAND(lit(nSalts.toLong - 1)))
+              xxhash64(saltCol).bitwiseAND(lit(OccSalts.toLong - 1)))
               .otherwise(lit(0L)))
         // window over (fingerprint, salt): for COLD groups salt is the
         // constant 0, so the slice is the whole group and these window
         // values are already the exact totals; the hottest key spreads
-        // over nSalts slices by construction
+        // over OccSalts slices by construction
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col(hCol), col("_salt"))
         val sliced = rows2
@@ -522,28 +524,26 @@ object Dedup {
     * partition-pruned index read (`_pb IN (batch's fingerprint
     * buckets)` — a driver-side list bounded by nPartBuckets), a LEFT
     * SEMI of index rows against the batch's distinct fingerprints
-    * (broadcast while under `maxBroadcastKeys`, shuffle semi beyond —
-    * the daily-ingest "increments are small" contract, enforced), then
-    * one skew-safe batch-sized group attach over the matched rows.
-    * Corpus text is never re-read, corpus fingerprints never
-    * recomputed.
+    * ([[probeIndex]]: broadcast while the batch is small, shuffle semi
+    * beyond — the daily-ingest "increments are small" contract,
+    * enforced), then one skew-safe batch-sized group attach over the
+    * matched rows. Corpus text is never re-read, corpus fingerprints
+    * never recomputed.
     */
-  def exactIncrementalDuplicates(spark: org.apache.spark.sql.SparkSession,
+  def exactIncrementalDuplicates(spark: SparkSession,
       indexPath: String, newBatch: DataFrame, keyCol: String, textCol: String,
-      nPartBuckets: Int = 256,
-      maxBroadcastKeys: Long = MaxBroadcastKeys): DataFrame = {
+      nPartBuckets: Int = 256): DataFrame =
+    exactIncrementalDuplicatesAt(spark, indexPath, newBatch, keyCol, textCol,
+      nPartBuckets, Tiers())
+
+  private[ops] def exactIncrementalDuplicatesAt(spark: SparkSession,
+      indexPath: String, newBatch: DataFrame, keyCol: String, textCol: String,
+      nPartBuckets: Int, tiers: Tiers): DataFrame = {
     val newRows = newBatch
       .select(unhex(fingerprint(col(textCol))).as("fp"), col(keyCol).as("id"))
       .where(col("fp").isNotNull)
       .withColumn("_pb", pmod(xxhash64(col("fp")), lit(nPartBuckets.toLong)))
-    val (localKeys, pbs, nKeys) = probeStats(newRows.select("fp", "_pb").distinct())
-    val newFps = probeSide(spark, localKeys, newRows.select("fp").schema,
-      newRows.select("fp").distinct())
-    val pruned = readIndex(spark, indexPath)
-      .where(col("_pb").cast("long").isin(pbs: _*)) // partition pruning
-    val oldMatched = (if (nKeys <= maxBroadcastKeys)
-        pruned.join(broadcast(newFps), Seq("fp"), "left_semi")
-      else pruned.join(newFps, Seq("fp"), "left_semi"))
+    val oldMatched = probeIndex(spark, indexPath, newRows.select("fp", "_pb"), tiers)._1
       .select(col("fp"), col("id"), lit(false).as("is_new"))
     val unioned = newRows.select(col("fp"), col("id"), lit(true).as("is_new"))
       .union(oldMatched)
@@ -726,30 +726,29 @@ object Dedup {
     * Scale shape: one scan of the BATCH text (signatures), a
     * partition-pruned index read (`_pb IN (batch's band hashes)` — a
     * driver-side list bounded by nPartBuckets), a LEFT SEMI of the
-    * index rows against the batch's distinct bands (broadcast while
-    * under `maxBroadcastKeys`, shuffle semi beyond — for corpus-sized
-    * "increments" the batch operator is still cheaper, but the fallback
-    * stays correct instead of OOMing the driver), then the same band-keyed bucket
-    * shuffle as the one-shot op, over matching rows only. Corpus text is
-    * never re-read, corpus signatures never recomputed.
+    * index rows against the batch's distinct bands ([[probeIndex]]:
+    * broadcast while the batch is small, shuffle semi beyond — for
+    * corpus-sized "increments" the batch operator is still cheaper, but
+    * the fallback stays correct instead of OOMing the driver), then the
+    * same band-keyed bucket shuffle as the one-shot op, over matching
+    * rows only. Corpus text is never re-read, corpus signatures never
+    * recomputed.
     */
-  def minhashIncrementalPairs(spark: org.apache.spark.sql.SparkSession,
+  def minhashIncrementalPairs(spark: SparkSession,
       indexPath: String, newBatch: DataFrame, keyCol: String, textCol: String,
       k: Int = 8, rowsPerBand: Int = 2, maxBucket: Int = 2000,
-      nPartBuckets: Int = 256,
-      maxBroadcastKeys: Long = MaxBroadcastKeys): DataFrame = {
+      nPartBuckets: Int = 256): DataFrame =
+    minhashIncrementalPairsAt(spark, indexPath, newBatch, keyCol, textCol,
+      k, rowsPerBand, maxBucket, nPartBuckets, Tiers())
+
+  private[ops] def minhashIncrementalPairsAt(spark: SparkSession,
+      indexPath: String, newBatch: DataFrame, keyCol: String, textCol: String,
+      k: Int, rowsPerBand: Int, maxBucket: Int, nPartBuckets: Int,
+      tiers: Tiers): DataFrame = {
     val newRows = bandRows(minhashSignature(newBatch, keyCol, textCol, k),
       keyCol, k, rowsPerBand, nPartBuckets)
-    val (localKeys, pbs, nKeys) = probeStats(
-      newRows.select(col("band_idx"), col("band"), col("_pb")).distinct())
-    val newBands = probeSide(spark, localKeys,
-      newRows.select(col("band_idx"), col("band")).schema,
-      newRows.select(col("band_idx"), col("band")).distinct())
-    val pruned = readIndex(spark, indexPath)
-      .where(col("_pb").cast("long").isin(pbs: _*)) // partition pruning
-    val oldMatched = (if (nKeys <= maxBroadcastKeys)
-        pruned.join(broadcast(newBands), Seq("band_idx", "band"), "left_semi")
-      else pruned.join(newBands, Seq("band_idx", "band"), "left_semi"))
+    val oldMatched = probeIndex(spark, indexPath,
+        newRows.select(col("band_idx"), col("band"), col("_pb")), tiers)._1
       .select(col("id"), col("band_idx"), col("band"), lit(false).as("is_new"))
     val buckets = observeCap(
       newRows.select(col("id"), col("band_idx"), col("band"), lit(true).as("is_new"))
@@ -1234,39 +1233,35 @@ object Dedup {
     * Scale shape: one scan of the BATCH text, a partition-pruned index
     * read (`_pb IN (batch's fingerprint buckets)`), a LEFT SEMI of
     * pruned index rows against the batch's distinct fingerprints
-    * (broadcast while under `maxBroadcastKeys` — the batch's own
-    * segment vocabulary, small by the daily-ingest contract — shuffle
-    * semi beyond), then one batch-sized skew-safe group attach +
-    * re-agg. Corpus text is never re-read.
+    * ([[probeIndex]]: broadcast while the batch's own segment
+    * vocabulary is small by the daily-ingest contract, shuffle semi
+    * beyond), then one batch-sized skew-safe group attach + re-agg.
+    * Corpus text is never re-read.
     */
-  def segmentIncrementalRewrite(spark: org.apache.spark.sql.SparkSession,
+  def segmentIncrementalRewrite(spark: SparkSession,
       indexPath: String, newBatch: DataFrame, keyCol: String, textCol: String,
       width: Int = 8, nPartBuckets: Int = 256,
-      maxBroadcastKeys: Long = MaxBroadcastKeys,
-      maxBid: Option[Long] = None): DataFrame = {
+      maxBid: Option[Long] = None): DataFrame =
+    segmentIncrementalRewriteAt(spark, indexPath, newBatch, keyCol, textCol,
+      width, nPartBuckets, maxBid, Tiers())
+
+  private[ops] def segmentIncrementalRewriteAt(spark: SparkSession,
+      indexPath: String, newBatch: DataFrame, keyCol: String, textCol: String,
+      width: Int, nPartBuckets: Int, maxBid: Option[Long],
+      tiers: Tiers): DataFrame = {
     val segs = segmentRows(newBatch, keyCol, textCol, width)
       .withColumn("fp", unhex(md5(col("seg").cast("binary"))))
       .withColumn("_pb", pmod(xxhash64(col("fp")), lit(nPartBuckets.toLong)))
-    // one probe job gates BOTH broadcasts (oldHit ⊆ batchFps, so the
-    // same bound covers it) AND yields the pruning bucket list — plus,
-    // in the common small-batch tier, the key set itself as a
-    // LocalRelation (no second batch kernel pass); past the cap, plain
-    // joins fall back to shuffle joins — identical output
-    val (localKeys, pbs, nKeys) = probeStats(segs.select("fp", "_pb").distinct())
-    val batchFps = probeSide(spark, localKeys, segs.select("fp").schema,
-      segs.select("fp").distinct())
-    val fpsSmall = nKeys <= maxBroadcastKeys
-    def whenSmall(d: DataFrame): DataFrame = if (fpsSmall) broadcast(d) else d
-    val indexAll = readIndex(spark, indexPath)
-      .where(col("_pb").cast("long").isin(pbs: _*)) // partition pruning
     // maxBid: replay safety for at-least-once writers (foreachBatch) —
     // "old" means appended by a STRICTLY EARLIER batch, so a replayed
     // batch whose own append already committed does not see its own
     // vocabulary and rewrite every doc to empty text. Requires the
     // index to carry [[segmentAppendIndex]]'s `bid` column.
-    val index = maxBid.map(b => indexAll.where(col("bid") < lit(b))).getOrElse(indexAll)
-    val oldHit = index
-      .join(whenSmall(batchFps), Seq("fp"), "left_semi")
+    val (oldFps, nKeys) = probeIndex(spark, indexPath, segs.select("fp", "_pb"),
+      tiers, maxBid.map(b => col("bid") < lit(b)))
+    // oldHit ⊆ the batch fingerprints, so the probe's key count gates
+    // its broadcast too
+    val oldHit = oldFps
       .select(col("fp")).distinct()
       .withColumn("_old", lit(true))
     val occ = struct(col("id"), col("pos"))
@@ -1274,7 +1269,7 @@ object Dedup {
       (col("_first").isNull ||
         occ === struct(col("_first").getField("id"), col("_first").getField("pos")))
     attachDupGroups(
-      segs.drop("_pb").join(whenSmall(oldHit), Seq("fp"), "left"),
+      segs.drop("_pb").join(broadcastIfFew(oldHit, nKeys, tiers), Seq("fp"), "left"),
       "fp", col("id"), Seq("id", "pos"), "left",
       // oldHit attaches ONE distinct marker row per fingerprint, so the
       // attach input is exactly the batch's segment rows — bound the
@@ -1319,23 +1314,11 @@ object Dedup {
     *
     * Output: `(id, cluster_id)` — one row per node that appears in at
     * least one pair (singletons are not duplicates and never enter the
-    * graph).
+    * graph). Pair graphs of at most [[CcMaxLocalEdges]] long-keyed
+    * edges skip the rounds: driver-side union-find, same labels.
     */
-  /** Conf key: edge-count bound for [[connectedComponents]]' local fast
-    * path. A pair graph at or under this many edges (known exactly — the
-    * edges are materialized and counted before the choice) is solved by
-    * driver-side union-find in one collect instead of O(log d) rounds of
-    * 2 distributed joins + a count each: LSH pair graphs at bench scale
-    * are thousands of edges, where the iterative form is pure scheduling
-    * overhead (~1 s measured round 6), while the driver cost is bounded
-    * at ~32 MB of edge rows. Identical labels by construction — both
-    * forms assign every node the component minimum. Set 0 to force the
-    * iterative path (soaks do).
-    */
-  val CcMaxLocalEdgesKey = "spark.graft.cc.maxLocalEdges"
-
-  /** Default for [[CcMaxLocalEdgesKey]]. */
-  val CcMaxLocalEdgesDefault: Long = 1000000L
+  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
+    connectedComponentsAt(pairs, aCol, bCol, Tiers())
 
   /** Driver-side union-find over collected edges: every node appearing
     * in ≥ 1 pair labeled with its component minimum — the same contract
@@ -1362,8 +1345,8 @@ object Dedup {
     parent.keySet().asScala.toSeq.map(id => (id, find(id)))
   }
 
-  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 50): DataFrame = {
+  private[ops] def connectedComponentsAt(pairs: DataFrame, aCol: String,
+      bCol: String, tiers: Tiers): DataFrame = {
     val sc = pairs.sparkSession.sparkContext
     // localCheckpoint persists its RDD for the Dataset's lifetime; in an
     // iterative loop the PREVIOUS round's labels-copy must be freed
@@ -1383,15 +1366,14 @@ object Dedup {
 
     // local fast path: the edge count is exact (one cheap count over the
     // just-checkpointed blocks) and bounds the collect; long-keyed
-    // small graphs resolve driver-side (see [[CcMaxLocalEdgesKey]]).
+    // small graphs resolve driver-side (see [[CcMaxLocalEdges]]).
     // A null endpoint (impossible for LSH pairs, representable in the
     // general contract) falls back to the iterative path, whose
     // null-join semantics are the documented behavior.
-    val maxLocal = confLong(pairs, CcMaxLocalEdgesKey, CcMaxLocalEdgesDefault)
     val longKeyed = pairs.schema(aCol).dataType ==
         org.apache.spark.sql.types.LongType &&
       pairs.schema(bCol).dataType == org.apache.spark.sql.types.LongType
-    if (longKeyed && maxLocal > 0 && edges.count() <= maxLocal) {
+    if (longKeyed && edges.count() <= tiers.ccLocalEdges) {
       val rows = edges.collect()
       if (!rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
         val labeled = localComponents(rows.map(r => (r.getLong(0), r.getLong(1))))
@@ -1411,7 +1393,7 @@ object Dedup {
         .select(col("id"), col("id").as("lbl")))
     var iter = 0
     var changed = 1L
-    while (changed > 0 && iter < maxIter) {
+    while (changed > 0 && iter < CcMaxRounds) {
       // neighbor-min: for each node, the smallest label among neighbors
       val nbrMin = edges
         .join(labels.select(col("id").as("did"), col("lbl").as("dlbl")),
@@ -1437,9 +1419,22 @@ object Dedup {
       labelIds = nextIds
       iter += 1
     }
-    require(changed == 0, s"connectedComponents did not converge in $maxIter rounds")
+    require(changed == 0, s"connectedComponents did not converge in $CcMaxRounds rounds")
     free(edgeIds) // the result no longer needs the edge blocks
     labels.select(col("id"), col("lbl").as("cluster_id"))
+  }
+
+  /** The guarded eval-side attach shared by text and token decon: LEFT
+    * SEMI of exploded corpus keys against the distinct eval key set —
+    * direct broadcast for eval inputs estimated at most
+    * [[DeconBenchMaxBytes]], else one count job into [[broadcastIfFew]].
+    */
+  private[ops] def deconSemiJoin(corpusKeys: DataFrame, benchKeys: DataFrame,
+      benchInput: DataFrame, on: Seq[String], tiers: Tiers): DataFrame = {
+    val side =
+      if (leafInputBytes(benchInput) <= tiers.deconBenchBytes) broadcast(benchKeys)
+      else broadcastIfFew(benchKeys, benchKeys.count(), tiers)
+    corpusKeys.join(side, on, "left_semi")
   }
 
   /** Benchmark decontamination: per corpus doc sharing at least one word
@@ -1459,37 +1454,13 @@ object Dedup {
     * plans the semi join as BroadcastHashJoin; nothing corpus-sized
     * ever crosses the wire.
     */
-  /** Conf key: eval-set inputs whose leaf-scan size estimate is at or
-    * below this many bytes broadcast their distinct shingle/gram set
-    * WITHOUT a count probe (the "eval benchmarks are small" contract
-    * honored for free). Above it, the [[semiJoinSmall]] guard the
-    * incremental probes use takes over: one count job, broadcast under
-    * [[MaxBroadcastKeys]] keys, shuffle semi beyond — identical output,
-    * never a driver OOM. 16 MiB default: ≤ ~160 MB raw text at 10×
-    * compression → ≤ ~32M grams → ≤ ~256 MB broadcast worst case,
-    * inside executor budgets; real eval sets are orders of magnitude
-    * under it, corpus-sized "benchmarks" are orders over.
-    */
-  val DeconBenchMaxBytesKey = "spark.graft.decon.benchMaxBytes"
-
-  /** Default for [[DeconBenchMaxBytesKey]]. */
-  val DeconBenchMaxBytesDefault: Long = 16L << 20
-
-  /** The guarded eval-side attach shared by text and token decon: LEFT
-    * SEMI of exploded corpus keys against the distinct eval key set —
-    * direct broadcast for contract-sized eval inputs, count-gated
-    * broadcast/shuffle fallback past [[DeconBenchMaxBytesKey]].
-    */
-  private[ops] def deconSemiJoin(corpusKeys: DataFrame, benchKeys: DataFrame,
-      benchInput: DataFrame, on: Seq[String]): DataFrame =
-    if (leafInputBytes(benchInput) <=
-        confLong(benchInput, DeconBenchMaxBytesKey, DeconBenchMaxBytesDefault))
-      corpusKeys.join(broadcast(benchKeys), on, "left_semi")
-    else semiJoinSmall(corpusKeys, benchKeys, on,
-      confLong(benchInput, "spark.graft.dedup.maxBroadcastKeys", MaxBroadcastKeys))
-
   def contaminationScores(corpus: DataFrame, keyCol: String, textCol: String,
-      bench: DataFrame, benchTextCol: String): DataFrame = {
+      bench: DataFrame, benchTextCol: String): DataFrame =
+    contaminationScoresAt(corpus, keyCol, textCol, bench, benchTextCol, Tiers())
+
+  private[ops] def contaminationScoresAt(corpus: DataFrame, keyCol: String,
+      textCol: String, bench: DataFrame, benchTextCol: String,
+      tiers: Tiers): DataFrame = {
     // explode_outer + generated-attribute null guard on BOTH sides: the
     // plain explode's inferred filter re-ran the shingle kernel inside a
     // pushed-down Filter (see ngramJaccardPairs). Exact: non-null text
@@ -1507,7 +1478,7 @@ object Dedup {
         .select(col("id"), size(col("sh")).as("n_sh"), explode_outer(col("sh")).as("s0"))
         .where(col("s0").isNotNull)
         .select(col("id"), col("n_sh"), xxhash64(col("s0")).as("s")),
-      bsh, bench, Seq("s"))
+      bsh, bench, Seq("s"), tiers)
       .groupBy(col("id"), col("n_sh"))
       .agg(count(lit(1)).as("n_overlap"))
       .withColumn("contamination",

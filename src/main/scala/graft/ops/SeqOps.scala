@@ -113,7 +113,13 @@ object SeqOps {
     */
   def tokenContaminationScores(corpus: DataFrame, keyCol: String,
       tokensCol: String, bench: DataFrame, benchTokensCol: String,
-      n: Int = 8): DataFrame = {
+      n: Int = 8): DataFrame =
+    tokenContaminationScoresAt(corpus, keyCol, tokensCol, bench, benchTokensCol,
+      n, Dedup.Tiers())
+
+  private[ops] def tokenContaminationScoresAt(corpus: DataFrame, keyCol: String,
+      tokensCol: String, bench: DataFrame, benchTokensCol: String, n: Int,
+      tiers: Dedup.Tiers): DataFrame = {
     // explode_outer + generated-attribute null guard on both sides: a
     // plain explode's inferred filter re-runs the gram kernel inside a
     // pushed-down Filter (see Dedup.ngramJaccardPairs). Exact: the
@@ -125,15 +131,15 @@ object SeqOps {
       .select(xxhash64(col("g0")).as("g"))
       .distinct()
     // eval-side broadcast guarded like the text form: direct for
-    // contract-sized eval inputs, count-gated fallback past the conf
-    // bound (see Dedup.DeconBenchMaxBytesKey) — identical output
+    // contract-sized eval inputs, count-gated fallback past the size
+    // bound (see Dedup.deconSemiJoin) — identical output
     Dedup.deconSemiJoin(
       corpus
         .select(col(keyCol).as("id"), tokenGrams(col(tokensCol), n).as("gs"))
         .select(col("id"), size(col("gs")).as("n_grams"), explode_outer(col("gs")).as("g0"))
         .where(col("g0").isNotNull)
         .select(col("id"), col("n_grams"), xxhash64(col("g0")).as("g")),
-      bg, bench, Seq("g"))
+      bg, bench, Seq("g"), tiers)
       .groupBy(col("id"), col("n_grams"))
       .agg(count(lit(1)).as("n_overlap"))
       .withColumn("contamination",

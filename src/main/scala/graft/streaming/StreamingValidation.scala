@@ -283,16 +283,6 @@ object StreamingValidation {
       .select(col(entityCol), col("n_events"), col("start_ts"),
         col("end_ts"), col("sum_value_c"))
 
-  /** Per-source running verdict counts (update-mode aggregation):
-    * `(source, n_rows, n_failed)` maintained incrementally.
-    */
-  def runningVerdicts(stream: DataFrame, spec: SchemaSpec, partCol: String): DataFrame =
-    ValidationEngine.annotate(stream, spec)
-      .groupBy(col(partCol))
-      .agg(
-        count(lit(1)).as("n_rows"),
-        sum(when(col(ValidationEngine.PassCol), 0L).otherwise(1L)).as("n_failed"))
-
   /** One bucketed observation for the streaming drift monitor. */
   final case class DriftEvent(group: String, bucket: Long)
 

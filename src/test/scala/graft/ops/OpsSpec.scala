@@ -628,17 +628,20 @@ class OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val before = sc.getPersistentRDDs.keySet
     // a 40-deep chain forces several propagate+jump rounds; the local
     // fast path is disabled so the ITERATIVE machinery is under test
-    spark.conf.set(Dedup.CcMaxLocalEdgesKey, "0")
-    try {
-      val pairs = (0L until 40L).map(i => (i, i + 1)).toDF("a", "b")
-      val out = Dedup.connectedComponents(pairs, "a", "b")
-      assert(out.where(col("cluster_id") === 0L).count() == 41L)
-      val leaked = sc.getPersistentRDDs.keySet -- before
-      // only the FINAL labels checkpoint may remain persisted — every
-      // superseded round's copy and the edge blocks must be freed
-      assert(leaked.size <= 1, s"leaked checkpoint RDDs: $leaked")
-    } finally spark.conf.unset(Dedup.CcMaxLocalEdgesKey)
+    val pairs = (0L until 40L).map(i => (i, i + 1)).toDF("a", "b")
+    val out = Dedup.connectedComponentsAt(pairs, "a", "b", Dedup.Tiers(ccLocalEdges = 0))
+    assert(!isLocal(out), "the iterative path must run")
+    assert(out.where(col("cluster_id") === 0L).count() == 41L)
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    // only the FINAL labels checkpoint may remain persisted — every
+    // superseded round's copy and the edge blocks must be freed
+    assert(leaked.size <= 1, s"leaked checkpoint RDDs: $leaked")
   }
+
+  /** True when every leaf of the frame's plan is a LocalRelation. */
+  private def isLocal(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.collectLeaves().forall(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
 
   test("connectedComponents ≡ brute-force transitive closure on a random pair graph") {
     val rnd = new scala.util.Random(11)
@@ -654,17 +657,15 @@ class OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     }
     val nodes = pairs.flatMap(p => Seq(p._1, p._2)).distinct
     val expect = nodes.map(n => n -> find(n)).toMap
-    // default confs: the LOCAL fast path (long keys, small edge count)
-    val got = Dedup.connectedComponents(pairs.toDF("a", "b"), "a", "b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == expect)
+    // default tiers: the LOCAL fast path (long keys, small edge count)
+    val local = Dedup.connectedComponents(pairs.toDF("a", "b"), "a", "b")
+    assert(isLocal(local), "a small long-keyed graph takes the local path")
+    assert(local.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == expect)
     // forced ITERATIVE path must agree row-for-row with the fast path
-    spark.conf.set(Dedup.CcMaxLocalEdgesKey, "0")
-    try {
-      val gotIter = Dedup.connectedComponents(pairs.toDF("a", "b"), "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(gotIter == expect)
-    } finally spark.conf.unset(Dedup.CcMaxLocalEdgesKey)
+    val iter = Dedup.connectedComponentsAt(pairs.toDF("a", "b"), "a", "b",
+      Dedup.Tiers(ccLocalEdges = 0))
+    assert(!isLocal(iter), "the iterative path must run")
+    assert(iter.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == expect)
   }
 
   test("PQ: every-vector-as-codeword reconstruction is exact — pqTopK ≡ brute force; ADC bit-equal to dot") {
@@ -986,25 +987,20 @@ class OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
       SeqOps.tokenize(col("text"), 4096).as("toks"))
     val tokBench = bench.select(col("doc_id"),
       SeqOps.tokenize(col("text"), 4096).as("toks"))
-    def textRun() = Dedup.contaminationScores(corpus, "doc_id", "text", bench, "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    def tokRun() = SeqOps.tokenContaminationScores(
-        tokCorpus, "doc_id", "toks", tokBench, "toks", n = 3)
+    def textRun(t: Dedup.Tiers) =
+      Dedup.contaminationScoresAt(corpus, "doc_id", "text", bench, "text", t)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    def tokRun(t: Dedup.Tiers) = SeqOps.tokenContaminationScoresAt(
+        tokCorpus, "doc_id", "toks", tokBench, "toks", 3, t)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    val (textWant, tokWant) = (textRun(), tokRun())
+    val (textWant, tokWant) = (textRun(Dedup.Tiers()), tokRun(Dedup.Tiers()))
     assert(textWant.nonEmpty && tokWant.nonEmpty)
-    // stage 1: estimate gate trips, count job says "still broadcastable"
-    spark.conf.set(Dedup.DeconBenchMaxBytesKey, "0")
-    try {
-      assert(textRun() == textWant)
-      assert(tokRun() == tokWant)
-      // stage 2: count gate trips too — plain shuffle semi join
-      spark.conf.set("spark.graft.dedup.maxBroadcastKeys", "0")
-      assert(textRun() == textWant)
-      assert(tokRun() == tokWant)
-    } finally {
-      spark.conf.unset(Dedup.DeconBenchMaxBytesKey)
-      spark.conf.unset("spark.graft.dedup.maxBroadcastKeys")
+    // stage 1: estimate gate trips, count job says "still broadcastable";
+    // stage 2: count gate trips too — plain shuffle semi join
+    for (t <- Seq(Dedup.Tiers(deconBenchBytes = 0),
+        Dedup.Tiers(deconBenchBytes = 0, broadcastKeys = 0))) {
+      assert(textRun(t) == textWant, t)
+      assert(tokRun(t) == tokWant, t)
     }
   }
 
@@ -1266,91 +1262,52 @@ class OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // past HotSampledMin = 32) and must route through the salted
     // window, with results BIT-IDENTICAL to the cold semantics
     // (routing is the only thing detection affects — the oracle
-    // property).
+    // property). The unique docs carry a 64-hex-digit tail, written
+    // uncompressed, so the input's file size clears the 4 MiB
+    // small-input probe skip and routing is under test.
     val dir = java.nio.file.Files.createTempDirectory("duphot").toString + "/docs"
     spark.range(200000).selectExpr("id AS doc_id",
       "CASE WHEN id % 2 = 1 THEN 'the same hot doc body here' " +
-      "ELSE concat('unique tail ', id, ' words') END AS text")
-      .write.parquet(dir)
+      "ELSE concat('unique tail ', sha2(cast(id AS string), 256), ' words') END AS text")
+      .write.option("compression", "none").parquet(dir)
     val pq = spark.read.parquet(dir)
-    // the test corpus compresses under the small-input probe skip's
-    // default byte bound — force the probe so routing is under test
-    spark.conf.set(Dedup.ProbeMinBytesKey, "0")
-    try {
-      val drops = Dedup.exactDuplicates(pq, "doc_id", "text")
-      // the salted plan must actually be chosen
-      drops.collect()
-      assert(drops.queryExecution.executedPlan.treeString.contains("_salt"),
-        "hot corpus did not take the salted path — strategy probe broken")
-      // exact semantics: all odd ids except the minimum (1) are dropped,
-      // every drop row names the survivor
-      val got = drops.as[(Long, Long)].collect()
-      assert(got.length == 99999)
-      assert(got.forall { case (id, keep) => id % 2 == 1 && id != 1L && keep == 1L })
-      // a boilerplate-SIZED group (df ~2k) must stay cold: the hot branch
-      // exists for task-scale keys only (see HotSampledMin)
-      val mild = spark.range(20000).selectExpr("id AS doc_id",
-        "CASE WHEN id % 10 = 1 THEN 'mildly duplicated body' " +
-        "ELSE concat('unique tail ', id, ' words') END AS text")
-      val mildDrops = Dedup.exactDuplicates(mild, "doc_id", "text")
-      mildDrops.collect()
-      assert(!mildDrops.queryExecution.executedPlan.treeString.contains("_salt"),
-        "boilerplate-sized group took the hot path — threshold miscalibrated")
-      // segment stats over the hot corpus: odd docs are one hot 6-word
-      // segment (within width 8), even docs unique → dup segment count
-      // is exactly the odd half
-      val st = Dedup.segmentStats(pq, "doc_id", "text", width = 8)
-        .agg(sum("n_segments"), sum("n_dup_segments")).as[(Long, Long)].head()
-      assert(st._1 == 200000L && st._2 == 100000L)
-    } finally spark.conf.unset(Dedup.ProbeMinBytesKey)
-  }
-
-  test("attachDupGroups conf knobs: non-default sampleMod/salts route the same corpus identically") {
-    // The scaling rule (Dedup.HotSampleModKey) says a 10^12 deployment
-    // retunes (sampleMod, sampledMin, nSalts); results must be routing-
-    // invariant. sampleMod=1 counts EVERY doc (no sampling), a lower
-    // sampledMin with a different power-of-two fan-out re-routes mild
-    // groups hot — every variant must emit bit-identical rows, and the
-    // small-input skip (probeMinBytes default) must equal the probed
-    // plans.
-    val dir = java.nio.file.Files.createTempDirectory("dupknob").toString + "/docs"
-    spark.range(50000).selectExpr("id AS doc_id",
-      "CASE WHEN id % 3 = 1 THEN 'knob corpus hot body text' " +
+    val drops = Dedup.exactDuplicates(pq, "doc_id", "text")
+    // the salted plan must actually be chosen
+    drops.collect()
+    assert(drops.queryExecution.executedPlan.treeString.contains("_salt"),
+      "hot corpus did not take the salted path — strategy probe broken")
+    // exact semantics: all odd ids except the minimum (1) are dropped,
+    // every drop row names the survivor
+    val got = drops.as[(Long, Long)].collect()
+    assert(got.length == 99999)
+    assert(got.forall { case (id, keep) => id % 2 == 1 && id != 1L && keep == 1L })
+    // a boilerplate-SIZED group (df ~2k) must stay cold: the hot branch
+    // exists for task-scale keys only (see HotSampledMin). 600k rows
+    // put the leaf estimate (8 bytes a row) past the probe skip too.
+    val mild = spark.range(600000).selectExpr("id AS doc_id",
+      "CASE WHEN id % 300 = 1 THEN 'mildly duplicated body' " +
       "ELSE concat('unique tail ', id, ' words') END AS text")
-      .write.parquet(dir)
-    val pq = spark.read.parquet(dir)
-    def run(): Set[(Long, Long, Long, Double)] =
-      Dedup.segmentStats(pq, "doc_id", "text", width = 4)
-        .collect().map(r =>
-          (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-    val dflt = run() // default confs: small input, probe skipped
-    val variants = Seq(
-      ("1", "2", "8"),     // count every doc, near-zero threshold, 8 salts
-      ("7", "3", "16"),    // odd sample mod
-      ("1024", "32", "64") // the shipped defaults, probe forced
-    )
-    for ((mod, min, salts) <- variants) {
-      spark.conf.set(Dedup.ProbeMinBytesKey, "0")
-      spark.conf.set(Dedup.HotSampleModKey, mod)
-      spark.conf.set(Dedup.HotSampledMinKey, min)
-      spark.conf.set(Dedup.OccSaltsKey, salts)
-      try assert(run() == dflt, s"results drifted at (mod=$mod, min=$min, salts=$salts)")
-      finally {
-        spark.conf.unset(Dedup.ProbeMinBytesKey)
-        spark.conf.unset(Dedup.HotSampleModKey)
-        spark.conf.unset(Dedup.HotSampledMinKey)
-        spark.conf.unset(Dedup.OccSaltsKey)
-      }
-    }
+    val mildDrops = Dedup.exactDuplicates(mild, "doc_id", "text")
+    assert(mildDrops.count() == 1999L)
+    assert(!mildDrops.queryExecution.executedPlan.treeString.contains("_salt"),
+      "boilerplate-sized group took the hot path — threshold miscalibrated")
+    // segment stats over the hot corpus: odd docs are one hot 6-word
+    // segment (within width 8), even docs unique → dup segment count
+    // is exactly the odd half
+    val st = Dedup.segmentStats(pq, "doc_id", "text", width = 8)
+      .agg(sum("n_segments"), sum("n_dup_segments")).as[(Long, Long)].head()
+    assert(st._1 == 200000L && st._2 == 100000L)
   }
 
   test("incremental probes: over-cap batches fall back to shuffle semi joins, identical output") {
-    // The broadcast of the batch-side distinct key set is a CONTRACT
-    // ("daily increments are small"), now enforced: maxBroadcastKeys = 0
-    // forces every probe down the fallback path — plain shuffle semi
-    // joins, zero driver-side collect — and the output must be
-    // bit-identical to the broadcast path's.
-    val all = Seq(
+    // Each probe has three tiers: a LocalRelation of the collected batch
+    // keys (≤ 65,536 distinct keys), the aggregation job with a broadcast
+    // key set (≤ 4M keys), and a plain shuffle semi join beyond. Lowered
+    // tiers reach the other two on a small batch; every tier must emit
+    // the same rows. The fixture is Parquet-backed so a LocalRelation in
+    // the plan can only be the probe side.
+    val dir = java.nio.file.Files.createTempDirectory("graft_tiers").toString
+    Seq(
       (0L, "the cat sat on the mat"),
       (1L, "The cat  sat on the mat"),
       (7L, "THE CAT SAT ON THE MAT "),
@@ -1358,35 +1315,76 @@ class OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
       (17L, "something else entirely"),
       (27L, "a new batch singleton"),
       (2L, "an old-only singleton seg one. seg two here. seg three now.")
-    ).toDF("doc_id", "text")
+    ).toDF("doc_id", "text").write.parquet(s"$dir/docs")
+    val all = spark.read.parquet(s"$dir/docs")
     val newB = all.where(col("doc_id") % 10 === 7)
     val oldB = all.where(col("doc_id") % 10 =!= 7)
+    val tiers = Seq(
+      "local" -> Dedup.Tiers(),
+      "aggregation" -> Dedup.Tiers(localProbeKeys = 0),
+      "shuffle" -> Dedup.Tiers(localProbeKeys = 0, broadcastKeys = 0))
+    def tierOf(df: org.apache.spark.sql.DataFrame): String = {
+      val p = df.queryExecution.optimizedPlan
+      if (p.collectLeaves().exists(
+          _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])) "local"
+      else if (p.toString.contains("strategy=broadcast")) "aggregation"
+      else "shuffle"
+    }
+    def differential(probe: String)(run: Dedup.Tiers => org.apache.spark.sql.DataFrame)
+        (rows: Row => Any): Unit = {
+      val outs = tiers.map { case (name, t) =>
+        val df = run(t)
+        assert(tierOf(df) == name, s"$probe: expected the $name tier")
+        df.collect().map(rows).toSet
+      }
+      assert(outs.head.nonEmpty, s"$probe: fixture must produce rows")
+      outs.tail.foreach(o => assert(o == outs.head, probe))
+    }
 
-    val fpIdx = java.nio.file.Files.createTempDirectory("graft_fb_fp").toString
+    val fpIdx = s"$dir/fp"
     Dedup.exactWriteIndex(oldB, "doc_id", "text", fpIdx)
-    val exBroadcast = Dedup.exactIncrementalDuplicates(spark, fpIdx, newB, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exFallback = Dedup.exactIncrementalDuplicates(spark, fpIdx, newB, "doc_id", "text",
-        maxBroadcastKeys = 0L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(exBroadcast == exFallback && exFallback.nonEmpty)
+    differential("exact")(Dedup.exactIncrementalDuplicatesAt(spark, fpIdx, newB,
+      "doc_id", "text", 256, _))(r => (r.getLong(0), r.getLong(1)))
 
-    val mhIdx = java.nio.file.Files.createTempDirectory("graft_fb_mh").toString
+    val mhIdx = s"$dir/mh"
     Dedup.minhashWriteIndex(oldB, "doc_id", "text", mhIdx)
-    val mhBroadcast = Dedup.minhashIncrementalPairs(spark, mhIdx, newB, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val mhFallback = Dedup.minhashIncrementalPairs(spark, mhIdx, newB, "doc_id", "text",
-        maxBroadcastKeys = 0L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(mhBroadcast == mhFallback && mhFallback.nonEmpty)
+    differential("minhash")(Dedup.minhashIncrementalPairsAt(spark, mhIdx, newB,
+      "doc_id", "text", 8, 2, 2000, 256, _))(r => (r.getLong(0), r.getLong(1)))
 
-    val segIdx = java.nio.file.Files.createTempDirectory("graft_fb_seg").toString
+    val segIdx = s"$dir/seg"
     Dedup.segmentWriteIndex(oldB, "doc_id", "text", segIdx, width = 3)
-    val segBatch = Seq((7L, "the cat sat on the mat. and a novel tail segment")).toDF("doc_id", "text")
-    def segRun(cap: Long) = Dedup.segmentIncrementalRewrite(spark, segIdx, segBatch,
-        "doc_id", "text", width = 3, maxBroadcastKeys = cap)
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSet
-    val segB = segRun(Dedup.MaxBroadcastKeys)
-    assert(segB == segRun(0L) && segB.nonEmpty)
+    val segBatch = spark.read.parquet(s"$dir/docs").where(col("doc_id") === 7L)
+      .select(col("doc_id"), lit("the cat sat on the mat. and a novel tail segment").as("text"))
+    differential("segment")(Dedup.segmentIncrementalRewriteAt(spark, segIdx, segBatch,
+      "doc_id", "text", 3, 256, None, _))(
+      r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
+  }
+
+  test("concurrent index probes leave the session conf as they found it") {
+    // readIndex lowers Spark's partition-discovery threshold around its
+    // read. Two probes at once must neither interleave their
+    // save/set/restore nor leave an unset key explicitly set.
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val s = spark.newSession()
+    val all = s.createDataFrame(Seq(
+      (0L, "the cat sat on the mat"),
+      (7L, "THE CAT SAT ON THE MAT "),
+      (3L, "something else entirely"),
+      (17L, "something else entirely"))).toDF("doc_id", "text")
+    val newB = all.where(col("doc_id") % 10 === 7)
+    val idx = java.nio.file.Files.createTempDirectory("graft_conc").toString
+    Dedup.exactWriteIndex(all.where(col("doc_id") % 10 =!= 7), "doc_id", "text", idx)
+    val before = s.conf.getAll
+    val probes = (0 until 2).map(_ => Future {
+      (0 until 3).map(_ =>
+        Dedup.exactIncrementalDuplicates(s, idx, newB, "doc_id", "text")
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+    })
+    val outs = probes.flatMap(f => Await.result(f, 2.minutes))
+    assert(outs.forall(_ == Set((7L, 0L), (17L, 3L))), outs)
+    val after = s.conf.getAll
+    assert(after == before, (after.toSet diff before.toSet, before.toSet diff after.toSet))
   }
 }
