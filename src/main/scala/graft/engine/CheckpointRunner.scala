@@ -4,17 +4,6 @@ import graft.spec.SchemaSpec
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Partition-granularity checkpointed validation runs — the Iceberg-style
-  * commit/resume seam (SURVEY.md §7.1).
-  *
-  * The input is processed one logical partition at a time (partition key =
-  * the table's `source`-style column, matching "partition by source" in
-  * the north star). Each partition's outputs (violations, verdict,
-  * metrics) land under `outDir/<kind>/part=<value>` with an idempotent
-  * overwrite, and a manifest row is committed LAST — a partition
-  * without a manifest row is re-run wholesale on resume, so interrupted
-  * runs resume at partition granularity with no partial-state repair.
-  */
 /** How a logical partition (= one `partCol` value) is further split into
   * commit units — the "range on doc_id" axis of the north star's
   * two-level layout (partition by source, split by doc_id). At 10^12
@@ -120,6 +109,17 @@ final class ParquetManifestIO(spark: SparkSession, outDir: String) extends Table
   }
 }
 
+/** Partition-granularity checkpointed validation runs — the Iceberg-style
+  * commit/resume seam (SURVEY.md §7.1).
+  *
+  * The input is processed one logical partition at a time (partition key =
+  * the table's `source`-style column, matching "partition by source" in
+  * the north star). Each partition's outputs (violations, verdict,
+  * metrics) land under `outDir/<kind>/part=<value>` with an idempotent
+  * overwrite, and a manifest row is committed LAST — a partition
+  * without a manifest row is re-run wholesale on resume, so interrupted
+  * runs resume at partition granularity with no partial-state repair.
+  */
 final class CheckpointRunner(spark: SparkSession, io: TableIO) {
 
   def this(spark: SparkSession, outDir: String) =
@@ -152,8 +152,8 @@ final class CheckpointRunner(spark: SparkSession, io: TableIO) {
     * (disjoint slices, per-unit output paths), so overlapping them keeps
     * executors saturated. Results return in deterministic unit order
     * regardless of completion order.
-    */
-  /** `emitValid = true` additionally writes each unit's VALID rows —
+    *
+    * `emitValid = true` additionally writes each unit's VALID rows —
     * the reference's compiled-parser semantics end-to-end: defaults are
     * substituted FIRST (CodeGen.hs:342-350; `ValidationEngine
     * .applyDefaults`), then the defaulted rows are validated, so a row

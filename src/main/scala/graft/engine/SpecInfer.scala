@@ -171,7 +171,7 @@ object SpecInfer {
     // in one Aggregate makes RewriteDistinctAggregates plan the
     // TypedImperative collect_set through Expand × (n_distinct_groups+1)
     // SortAggregates — measured 4.7 s vs 0.39 s at sf0.1 for
-    // bit-identical output (DiagInfer, round 6). Each subtree is one
+    // bit-identical output (plans/r06/val_infer_rows_*). Each subtree is one
     // scan with map-side partial aggregation; two scans beat one
     // Expand-multiplied sort-aggregate at every scale.
     val aggs: Seq[Column] = count(lit(1)).as("_n") +: fields.flatMap { f =>

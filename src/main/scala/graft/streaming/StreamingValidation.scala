@@ -16,10 +16,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
   */
 object StreamingValidation {
 
-  /** Row-level validation of a stream: same fused projection as batch. */
-  def annotate(stream: DataFrame, spec: SchemaSpec): DataFrame =
-    ValidationEngine.annotate(stream, spec)
-
   /** Windowed per-constraint violation counts with a watermark: emits
     * `(window, constraint_id, n)` per event-time window, late data beyond
     * the watermark dropped. Output mode: update/append per sink choice.

@@ -58,6 +58,18 @@ class SequenceGenSpec extends AnyFunSuite with SparkSessionTestWrapper {
     new graft.GraftExtensions()(new org.apache.spark.sql.SparkSessionExtensions)
   }
 
+  test("annotated generator output evaluates GenTokens once (_tok_raw is not inlined)") {
+    // CollapseProject inlines a copy of the generator per reference site
+    // when the tokens are not materialized in their own projection, and
+    // the stage then exceeds the JIT's method size limit
+    val annotated = graft.engine.ValidationEngine.annotate(
+      SequenceGen.generate(spark, 1000),
+      graft.spec.SchemaParser.parse(graft.Main.builtinSpec))
+    val copies = annotated.queryExecution.optimizedPlan.flatMap(_.expressions)
+      .map(_.collect { case g: GenTokens => g }.size).sum
+    assert(copies == 1)
+  }
+
   test("doc_id format: d + 10 zero-padded digits (lpad path)") {
     // exclude the injected bad-format class (id % 2000 == 97 → "BAD~<id>")
     val ids = SequenceGen.generate(spark, 100).select("doc_id")

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSessionTestWrapper
+import graft.engine.ValidationEngine
 import graft.spec.SchemaParser
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -21,7 +22,7 @@ class StreamingValidationSpec extends AnyFunSuite with SparkSessionTestWrapper {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
-    val q = StreamingValidation.annotate(mem.toDF(), spec)
+    val q = ValidationEngine.annotate(mem.toDF(), spec)
       .select($"doc_id", $"valid")
       .writeStream.format("memory").queryName("sv_annotate").outputMode("append").start()
     try {
