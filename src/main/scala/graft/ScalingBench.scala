@@ -9,7 +9,7 @@ import java.nio.file.{Files, Paths}
 /** North-rule measurement: the same validation job at two parallelism
   * levels (local[N] vs local[4N] — the sandbox stand-in for N vs 4N
   * executors), reporting throughput at both and the scaling efficiency
-  * `(thr_4N / thr_N) / 4`, written to BENCH/BASELINE.md.
+  * `(thr_4N / thr_N) / 4`, printed as one JSON line.
   *
   * Method: materialize a generated sequences table to parquet once
   * (untimed), then run interleaved repetitions — each times
@@ -49,7 +49,6 @@ object ScalingBench {
     val rows = sys.env.getOrElse("SPARK_GRAFT_SCALE_ROWS", "12000000").toLong
     val n = sys.env.getOrElse("SPARK_GRAFT_SCALE_N", "8").toInt
     val data = s"/tmp/graft_scale_${rows}"
-    val outMd = "BENCH/BASELINE.md"
 
     def session(cpus: Int): SparkSession = {
       val s = SparkSession.builder()
@@ -172,98 +171,6 @@ object ScalingBench {
     val hwScale = cal4N / calN // ideal = 4.0 on real hardware
     val effNorm = (thr4N / thrN) / hwScale
 
-    val md =
-      f"""# BENCH / BASELINE — measured scaling (north rule)
-         |
-         |Two configurations of the same fused validation pass (full builtin
-         |spec: required/pattern/length/bounds/minItems/element bounds →
-         |verdicts + violations, noop sink forces full computation; shuffle-free,
-         |one whole-stage-codegen projection per partition):
-         |
-         |1. **scan+validate** — parquet read → validate (the production shape).
-         |2. **compute-validate** — deterministic in-place generation → validate
-         |   (no I/O; isolates the engine's own scaling behavior).
-         |
-         || Config | Value |
-         || --- | --- |
-         || rows | $rows |
-         || table | $data (parquet, ${8 * n} files) |
-         || N / 4N (cores) | $n / ${4 * n} |
-         |
-         || Job | local[$n] sec | local[${4 * n}] sec | thr@N rows/s | thr@4N rows/s | raw efficiency |
-         || --- | --- | --- | --- | --- | --- |
-         || scan+validate (wall, incl. planning) | $secN%.2f | $sec4N%.2f | ${thrN}%.0f | ${thr4N}%.0f | $eff%.3f |
-         || compute-validate (wall, incl. planning) | $csecN%.2f | $csec4N%.2f | ${cthrN}%.0f | ${cthr4N}%.0f | $ceff%.3f |
-         || compute-validate (steady-state: plan once, execute) | $ssecN%.2f | $ssec4N%.2f | ${rows / ssecN}%.0f | ${rows / ssec4N}%.0f | **$seff%.3f** |
-         |
-         || Metric | Value |
-         || --- | --- |
-         || Hardware calibration: pure-CPU thread scaling ${4 * n}→$n threads | ${hwScale}%.2f× (ideal 4×) |
-         || scan+validate hardware-normalized efficiency | $effNorm%.3f |
-         || **steady-state compute-validate raw efficiency (north-rule criterion)** | **$seff%.3f** (target ≥ 0.8) |
-         || compute-validate wall efficiency (incl. constant per-job planning) | $ceff%.3f |
-         |
-         |Interpretation: the steady-state compute-validate row is the
-         |north-rule criterion, reported RAW — no hardware normalization.
-         |Steady-state = the physical plan is built once and executed
-         |repeatedly; this isolates the distributed execution, which is what
-         |actually runs per-executor at N vs 4N. The wall rows additionally
-         |include the per-job driver planning cost (constant ~1.5-1.8 s for
-         |this plan, measured by varying row count) — a cost that is
-         |IDENTICAL at both cluster sizes (the same driver plans either
-         |way), so it dilutes the wall ratio at small job sizes while
-         |amortizing to zero at production job sizes. The engine introduces
-         |no scaling bottleneck of its own: no shuffle, no driver
-         |round-trips, no locks.
-         |The scan+validate raw gap is the single-box page-cache read +
-         |parquet array-decode path, whose bandwidth is SHARED by all local
-         |threads: on a real N→4N multi-node cluster that term is multiplied
-         |by node count (each executor owns its own memory channels and
-         |disks), so the production job tracks the compute-validate ratio,
-         |not the single-box scan ratio. The calibration row (allocation-free
-         |arithmetic on plain JVM threads, no Spark) bounds what ANY job can
-         |achieve on this virtualized box.
-         |
-         |Round-2 engineering that moved compute-validate raw efficiency
-         |0.58 → 0.80 while raising local[32] throughput 515k → 9.6M rows/s
-         |(18.7×): (1) `GenTokens`, a codegen'd custom expression replacing
-         |eval-only `transform(sequence(...))` with the row-constant hash
-         |prefix hoisted out of the element loop; (2) materializing the
-         |token array once in its own projection — CollapseProject was
-         |inlining ~12 copies of the generator through CaseWhen reference
-         |sites, blowing the generated method past the JIT's 8000-byte limit
-         |(the stage ran interpreted); (3) compiling numeric element bounds
-         |to `array_min`/`array_max` instead of `forall` (higher-order
-         |functions are eval-only and box every element); (4) 48M-row jobs
-         |so the fixed planning cost stops dominating a now-4s job.
-         |
-         |Measured by `graft.ScalingBench`: $reps INTERLEAVED repetitions — each
-         |repetition times all three jobs at local[$n] then immediately at
-         |local[${4 * n}], so slow host-throughput drift on this shared box
-         |hits both levels equally; min over repetitions per (job, level)
-         |(noise is one-sided: contention only slows). The first repetition
-         |runs the compute/steady jobs untimed once for JIT; the scan job
-         |is warmed untimed on EVERY pass (each pass is a fresh session
-         |whose file-listing/footer caches start empty). Same input at
-         |both levels. Single-JVM local mode is the sandbox stand-in for N
-         |vs 4N executors per the task brief.
-         |
-         |Host 1-min load average at the start of each repetition (this box
-         |is shared; neighbor load directly contaminates timings):
-         |${repLoads.map(l => f"$l%.1f").mkString(", ")}.
-         |""".stripMargin
-
-    Files.createDirectories(Paths.get("BENCH"))
-    // replace only the auto-generated header; everything from the
-    // hand-curated "## Measurement history" marker on is preserved
-    // (a past run overwrote the whole file and lost the history)
-    val preserved =
-      if (Files.exists(Paths.get(outMd))) {
-        val cur = Files.readString(Paths.get(outMd))
-        val i = cur.indexOf("## Measurement history")
-        if (i >= 0) cur.substring(i) else ""
-      } else ""
-    Files.writeString(Paths.get(outMd), if (preserved.isEmpty) md else s"$md\n$preserved")
-    println(s"""{"rows":$rows,"secN":$secN,"sec4N":$sec4N,"thrN":$thrN,"thr4N":$thr4N,"efficiency":$eff,"hw_scale":$hwScale,"efficiency_normalized":$effNorm,"compute_secN":$csecN,"compute_sec4N":$csec4N,"compute_efficiency":$ceff,"steady_secN":$ssecN,"steady_sec4N":$ssec4N,"steady_efficiency":$seff,"rep_host_loads":[${repLoads.mkString(",")}]}""")
+    println(s"""{"rows":$rows,"n":$n,"secN":$secN,"sec4N":$sec4N,"thrN":$thrN,"thr4N":$thr4N,"efficiency":$eff,"hw_scale":$hwScale,"efficiency_normalized":$effNorm,"compute_secN":$csecN,"compute_sec4N":$csec4N,"compute_efficiency":$ceff,"steady_secN":$ssecN,"steady_sec4N":$ssec4N,"steady_efficiency":$seff,"rep_host_loads":[${repLoads.mkString(",")}]}""")
   }
 }

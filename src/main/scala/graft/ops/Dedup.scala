@@ -539,10 +539,7 @@ object Dedup {
   private[ops] def exactIncrementalDuplicatesAt(spark: SparkSession,
       indexPath: String, newBatch: DataFrame, keyCol: String, textCol: String,
       nPartBuckets: Int, tiers: Tiers): DataFrame = {
-    val newRows = newBatch
-      .select(unhex(fingerprint(col(textCol))).as("fp"), col(keyCol).as("id"))
-      .where(col("fp").isNotNull)
-      .withColumn("_pb", pmod(xxhash64(col("fp")), lit(nPartBuckets.toLong)))
+    val newRows = exactIndexRows(newBatch, keyCol, textCol, nPartBuckets)
     val oldMatched = probeIndex(spark, indexPath, newRows.select("fp", "_pb"), tiers)._1
       .select(col("fp"), col("id"), lit(false).as("is_new"))
     val unioned = newRows.select(col("fp"), col("id"), lit(true).as("is_new"))

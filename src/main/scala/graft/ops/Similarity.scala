@@ -124,24 +124,14 @@ object Similarity {
     */
   def bruteForceTopKAgg(corpus: DataFrame, cKey: String, cVec: String,
       queries: DataFrame, qKey: String, qVec: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType, IntegerType}
     val c = corpus.withColumn("_cn", norm(col(cVec)))
     val q = queries.withColumn("_qn", norm(col(qVec)))
-    val topk = corpus.schema(cKey).dataType match {
-      case LongType | IntegerType => udaf(new TopKByScore[Long](k))
-      case StringType             => udaf(new TopKByScore[String](k))
-      case dt => throw new IllegalArgumentException(s"unsupported key type $dt")
-    }
-    c.join(broadcast(q), col(qKey) =!= col(cKey))
-      .select(col(qKey),
-        struct(col(cKey).as("key"),
-          (dot(col(qVec), col(cVec)) / (col("_qn") * col("_cn"))).as("score"))
-          .as("cand"))
-      .groupBy(col(qKey))
-      .agg(topk(col("cand.key"), col("cand.score")).as("top"))
-      .select(col(qKey).as("query_id"), posexplode(col("top")).as(Seq("pos", "c")))
-      .select(col("query_id"), col("c.key").as("neighbor_id"),
-        (col("pos") + 1).as("rank"), round(col("c.score"), 6).as("cos"))
+    topKExplode(
+      c.join(broadcast(q), col(qKey) =!= col(cKey))
+        .select(col(qKey),
+          col(cKey).as("_k"),
+          (dot(col(qVec), col(cVec)) / (col("_qn") * col("_cn"))).as("_s")),
+      qKey, k)
   }
 
   /** Deterministic random hyperplanes: `bits` planes × `dim` components
@@ -298,13 +288,6 @@ object Similarity {
       centroids.map(_._1), centroids.map(_._2), nprobe))
   }
 
-  /** IVF approximate top-k: the corpus is bucketed once by [[ivfCell]]
-    * (in production: written out partitioned/bucketed by cell, so probes
-    * become partition pruning); each query scans only its `nprobe`
-    * nearest cells. Per-query cost |corpus|·nprobe/|centroids| vs the
-    * brute-force |corpus|; recall < 1 near cell boundaries. Top-k uses
-    * the bounded [[TopKByScore]] aggregator, never a full-stream sort.
-    */
   private[ops] def topKAggFor(keyType: org.apache.spark.sql.types.DataType, k: Int) =
     keyType match {
       case org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.IntegerType =>
@@ -313,12 +296,8 @@ object Similarity {
       case dt => throw new IllegalArgumentException(s"unsupported key type $dt")
     }
 
-  /** The shared IVF tail: cell-equality broadcast join of probes against
-    * the (cell, norm)-annotated corpus, then the bounded top-k
-    * aggregation. `c` must carry `_cell`/`_cn`; `q` must carry
-    * `_cell`/`_qn`.
-    */
-  /** Bounded top-k + explode tail shared by the cell join and PQ paths:
+  /** Bounded top-k + explode tail shared by the brute-force, cell join
+    * and PQ paths:
     * `scored` has (qKey, _k, _s); at most k rows per query cross the
     * shuffle (TopKByScore partial aggregation).
     */
@@ -332,6 +311,11 @@ object Similarity {
         (col("pos") + 1).as("rank"), round(col("c.score"), 6).as("cos"))
   }
 
+  /** The shared IVF tail: cell-equality broadcast join of probes against
+    * the (cell, norm)-annotated corpus, then the bounded top-k
+    * aggregation. `c` must carry `_cell`/`_cn`; `q` must carry
+    * `_cell`/`_qn`.
+    */
   private def cellJoinTopK(c: DataFrame, cKey: String, cVec: String,
       q: DataFrame, qKey: String, qVec: String, k: Int): DataFrame =
     topKExplode(
@@ -349,6 +333,13 @@ object Similarity {
       .select(col(qKey), col(qVec), explode(ivfProbes(col(qVec), centroids, nprobe)).as("_cell"))
       .withColumn("_qn", norm(col(qVec)))
 
+  /** IVF approximate top-k: the corpus is bucketed once by [[ivfCell]]
+    * (in production: written out partitioned/bucketed by cell, so probes
+    * become partition pruning); each query scans only its `nprobe`
+    * nearest cells. Per-query cost |corpus|·nprobe/|centroids| vs the
+    * brute-force |corpus|; recall < 1 near cell boundaries. Top-k uses
+    * the bounded [[TopKByScore]] aggregator, never a full-stream sort.
+    */
   def ivfTopK(corpus: DataFrame, cKey: String, cVec: String,
       queries: DataFrame, qKey: String, qVec: String, k: Int,
       centroids: Array[(Long, Array[Double])], nprobe: Int): DataFrame = {

@@ -2,43 +2,57 @@ package graft.streaming
 
 import graft.engine.ValidationEngine
 import graft.spec.SchemaSpec
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout}
 
-/** Structured-Streaming forms of the validation engine.
+/** What Structured Streaming adds to the batch operators.
   *
-  * The fused constraint projection is stateless, so
-  * [[ValidationEngine.annotate]] applies to a streaming DataFrame
-  * unchanged (readStream → annotate → writeStream). What streams add is
-  * state: watermarked windowed violation rollups and exact streaming
-  * dedup, both below.
+  * Batch operators run on a stream unchanged, so they have no streaming
+  * copy here: [[ValidationEngine.annotate]] (readStream → annotate →
+  * writeStream); [[graft.ops.Dedup.contaminationScores]] in update mode,
+  * a running result table with one state row per contaminated doc; any
+  * batch operator per micro-batch through `foreachBatch`, which keeps no
+  * cross-batch state (e.g. `contaminationScores`, or
+  * [[graft.engine.MergeableProfile.batchProfile]] with the micro-batch id
+  * as its batch column); and Spark's `dropDuplicatesWithinWatermark` for
+  * exact dedup within a watermark. This object holds what streams add:
+  * windowed violation counts over [[ValidationEngine.violationsWith]],
+  * the two index-ingest loops, gap sessionization and the custom-state
+  * drift monitor.
   */
 object StreamingValidation {
 
   /** Windowed per-constraint violation counts with a watermark: emits
     * `(window, constraint_id, n)` per event-time window, late data beyond
-    * the watermark dropped. Output mode: update/append per sink choice.
+    * the watermark dropped. The rows come from the batch violation path
+    * ([[ValidationEngine.violationsWith]]), so a stream takes the same
+    * fast or outer strategy as batch. Output mode: update/append per
+    * sink choice.
     */
   def violationCountsByWindow(stream: DataFrame, spec: SchemaSpec,
       timeCol: String, windowDur: String, watermarkDelay: String): DataFrame =
-    ValidationEngine.annotate(stream, spec)
-      .withWatermark(timeCol, watermarkDelay)
-      .where(!col(ValidationEngine.PassCol))
-      .select(col(timeCol), explode(col(ValidationEngine.ViolationsCol)).as("v"))
-      .groupBy(window(col(timeCol), windowDur), col("v.constraint_id").as("constraint_id"))
+    ValidationEngine.violationsWith(
+        ValidationEngine.annotate(stream, spec).withWatermark(timeCol, watermarkDelay),
+        Seq(timeCol))
+      .groupBy(window(col(timeCol), windowDur), col("constraint_id"))
       .agg(count(lit(1)).as("n"))
 
-  /** Exact streaming dedup on a key within the watermark horizon —
-    * Spark's stateful dropDuplicates keeps one state entry per key until
-    * the watermark passes (bounded state; the streaming analog of the
-    * batch uniqueness check).
+  /** The micro-batch scaffold of the two ingest loops: each micro-batch
+    * is localCheckpoint'd, so the source batch is scanned once across
+    * probe/filter/append, then `body` runs on it; every RDD pinned
+    * during the batch is unpersisted before the closure returns, so
+    * executor storage does not grow with stream lifetime.
     */
-  def dedupStream(stream: DataFrame, keyCol: String,
-      timeCol: String, watermarkDelay: String): DataFrame =
-    stream
-      .withWatermark(timeCol, watermarkDelay)
-      .dropDuplicatesWithinWatermark(keyCol)
+  private def pinnedBatches(stream: DataFrame)(body: (DataFrame, Long) => Unit)
+      : DataStreamWriter[Row] =
+    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      val sc = batch.sparkSession.sparkContext
+      val pinnedBefore = sc.getPersistentRDDs.keySet
+      try body(batch.localCheckpoint(), batchId)
+      finally (sc.getPersistentRDDs.keySet -- pinnedBefore)
+        .foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
+    }
 
   /** Streaming near-duplicate INGEST — the daily-ingest loop as a
     * continuous query. Per micro-batch: probe the materialized minhash
@@ -57,53 +71,40 @@ object StreamingValidation {
     * State story: the QUERY carries zero state-store state (asserted by
     * StreamingValidationSpec) — the index on storage IS the state, it
     * grows only with accepted docs, and each batch reads only its
-    * partition-pruned band buckets, never the corpus. The micro-batch
-    * and the drop-list are localCheckpoint'd so (a) the source batch is
-    * scanned once across probe/filter/append, and (b) nothing re-reads
-    * the index AFTER the append (a lazy plan would otherwise see its
-    * own batch's bands and self-flag); every block the closure pins is
-    * freed before it returns, so executor storage does not grow with
-    * stream lifetime.
+    * partition-pruned band buckets, never the corpus. Besides the
+    * micro-batch ([[pinnedBatches]]), the drop-list is localCheckpoint'd
+    * so nothing re-reads the index AFTER the append (a lazy plan would
+    * otherwise see its own batch's bands and self-flag).
     */
   def dedupIngestStream(stream: DataFrame, keyCol: String, textCol: String,
       indexPath: String, k: Int = 8, rowsPerBand: Int = 2,
       maxBucket: Int = 2000, nPartBuckets: Int = 256)(
-      sink: (DataFrame, DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      sink: (DataFrame, DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    pinnedBatches(stream) { (b, batchId) =>
       import graft.ops.Dedup
-      val spark = batch.sparkSession
-      val sc = spark.sparkContext
-      val pinnedBefore = sc.getPersistentRDDs.keySet
-      try {
-        val b = batch.localCheckpoint()
-        val pairs =
-          if (indexNonEmpty(spark, indexPath))
-            Dedup.minhashIncrementalPairs(spark, indexPath, b, keyCol, textCol,
-              k, rowsPerBand, maxBucket, nPartBuckets)
-          else // first batch bootstraps the index: within-batch pairs only
-            Dedup.minhashCandidatePairs(
-              Dedup.minhashSignature(b, keyCol, textCol, k), keyCol, k,
-              rowsPerBand, maxBucket)
-        val keys = b.select(col(keyCol).as("_k")).distinct()
-        // (doc, partner) in both orientations, restricted to batch docs
-        val cand = pairs.select(col("a").as("_x"), col("b").as("_y"))
-          .union(pairs.select(col("b").as("_x"), col("a").as("_y")))
-          .join(keys.withColumnRenamed("_k", "_x"), Seq("_x"), "left_semi")
-        val dropIds = cand
-          .join(keys.select(col("_k").as("_y"), lit(true).as("_pn")), Seq("_y"), "left")
-          .where(col("_pn").isNull || col("_y") < col("_x"))
-          .select(col("_x").as(keyCol)).distinct()
-          .localCheckpoint() // materialized BEFORE the index append below
-        val accepted = b.join(dropIds, Seq(keyCol), "left_anti")
-        val dropped = b.join(dropIds, Seq(keyCol), "left_semi")
-        Dedup.minhashAppendIndex(accepted, keyCol, textCol, indexPath, k,
-          rowsPerBand, nPartBuckets)
-        sink(accepted, dropped, batchId)
-      } finally {
-        (sc.getPersistentRDDs.keySet -- pinnedBefore)
-          .foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-      }
+      val pairs =
+        if (indexNonEmpty(b.sparkSession, indexPath))
+          Dedup.minhashIncrementalPairs(b.sparkSession, indexPath, b, keyCol,
+            textCol, k, rowsPerBand, maxBucket, nPartBuckets)
+        else // first batch bootstraps the index: within-batch pairs only
+          Dedup.minhashCandidatePairs(
+            Dedup.minhashSignature(b, keyCol, textCol, k), keyCol, k,
+            rowsPerBand, maxBucket)
+      val keys = b.select(col(keyCol).as("_k")).distinct()
+      // (doc, partner) in both orientations, restricted to batch docs
+      val cand = pairs.select(col("a").as("_x"), col("b").as("_y"))
+        .union(pairs.select(col("b").as("_x"), col("a").as("_y")))
+        .join(keys.withColumnRenamed("_k", "_x"), Seq("_x"), "left_semi")
+      val dropIds = cand
+        .join(keys.select(col("_k").as("_y"), lit(true).as("_pn")), Seq("_y"), "left")
+        .where(col("_pn").isNull || col("_y") < col("_x"))
+        .select(col("_x").as(keyCol)).distinct()
+        .localCheckpoint() // materialized BEFORE the index append below
+      val accepted = b.join(dropIds, Seq(keyCol), "left_anti")
+      val dropped = b.join(dropIds, Seq(keyCol), "left_semi")
+      Dedup.minhashAppendIndex(accepted, keyCol, textCol, indexPath, k,
+        rowsPerBand, nPartBuckets)
+      sink(accepted, dropped, batchId)
     }
 
   /** Streaming segment (line) dedup ingest — cross-dump line dedup as a
@@ -132,38 +133,28 @@ object StreamingValidation {
     */
   def segmentIngestStream(stream: DataFrame, keyCol: String, textCol: String,
       indexPath: String, width: Int = 8, nPartBuckets: Int = 256)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    pinnedBatches(stream) { (b, batchId) =>
       import graft.ops.Dedup
-      val spark = batch.sparkSession
-      val sc = spark.sparkContext
-      val pinnedBefore = sc.getPersistentRDDs.keySet
-      try {
-        val b = batch.localCheckpoint()
-        // materialized BEFORE the append: a lazy plan would re-read the
-        // index after its own batch's vocabulary landed in it
-        val rewritten =
-          (if (indexNonEmpty(spark, indexPath))
-            // maxBid = this batch: "old" means appended by a strictly
-            // earlier batch, so a foreachBatch REPLAY (restart between
-            // the append below and the batch commit) cannot probe its
-            // own prior append and rewrite the whole batch to empty
-            // text — the replayed run produces the original output
-            Dedup.segmentIncrementalRewrite(spark, indexPath, b, keyCol,
-              textCol, width, nPartBuckets, maxBid = Some(batchId))
-          else
-            Dedup.dropDuplicateSegments(b, keyCol, textCol, width))
-            .localCheckpoint()
-        // bid-stamped append: a replayed append is an inert duplicate
-        // (the index is a set and probes exclude bid >= their own)
-        Dedup.segmentAppendIndex(b, keyCol, textCol, indexPath, width,
-          nPartBuckets, bid = batchId)
-        sink(rewritten, batchId)
-      } finally {
-        (sc.getPersistentRDDs.keySet -- pinnedBefore)
-          .foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-      }
+      // materialized BEFORE the append: a lazy plan would re-read the
+      // index after its own batch's vocabulary landed in it
+      val rewritten =
+        (if (indexNonEmpty(b.sparkSession, indexPath))
+          // maxBid = this batch: "old" means appended by a strictly
+          // earlier batch, so a foreachBatch REPLAY (restart between
+          // the append below and the batch commit) cannot probe its
+          // own prior append and rewrite the whole batch to empty
+          // text — the replayed run produces the original output
+          Dedup.segmentIncrementalRewrite(b.sparkSession, indexPath, b, keyCol,
+            textCol, width, nPartBuckets, maxBid = Some(batchId))
+        else
+          Dedup.dropDuplicateSegments(b, keyCol, textCol, width))
+          .localCheckpoint()
+      // bid-stamped append: a replayed append is an inert duplicate
+      // (the index is a set and probes exclude bid >= their own)
+      Dedup.segmentAppendIndex(b, keyCol, textCol, indexPath, width,
+        nPartBuckets, bid = batchId)
+      sink(rewritten, batchId)
     }
 
   /** True iff `path` already holds index bucket directories (Hadoop FS,
@@ -174,82 +165,6 @@ object StreamingValidation {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.startsWith("_pb="))
-  }
-
-  /** Streaming decontamination, bounded-state DEFAULT: run the batch
-    * operator ([[graft.ops.Dedup.contaminationScores]]) once per
-    * micro-batch via `foreachBatch`. A doc's shingles all arrive WITH
-    * the doc, so per-batch scoring is exact — and because the batch
-    * operator's aggregation lives entirely inside one micro-batch, the
-    * query carries ZERO cross-batch state (no state store at all;
-    * asserted by StreamingValidationSpec): state cannot grow with
-    * processed-doc count, unlike the update-mode aggregation of
-    * [[decontaminateStreamRunning]], which keeps one state row per
-    * contaminated doc forever. `sink` receives each micro-batch's
-    * `(id, n_overlap, contamination)` rows with the batch id; call
-    * `.start()` (plus checkpointLocation etc.) on the returned writer.
-    */
-  def decontaminateStream(stream: DataFrame, keyCol: String, textCol: String,
-      bench: DataFrame, benchTextCol: String)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      sink(graft.ops.Dedup.contaminationScores(
-        batch, keyCol, textCol, bench, benchTextCol), batchId)
-    }
-
-  /** Streaming mergeable profiling: emit one profile ARTIFACT row per
-    * micro-batch via `foreachBatch` — the streaming form of
-    * [[graft.engine.MergeableProfile]]. The query itself carries ZERO
-    * cross-batch state (no state store; same contract as
-    * [[decontaminateStream]]): the persisted artifacts ARE the state,
-    * and any span of them merges later via
-    * [[graft.engine.MergeableProfile.merge]] — StreamingValidationSpec
-    * asserts merge-of-micro-batch-artifacts ≡ the batch profile of the
-    * whole stream, sketches included. `sink` receives each micro-batch's
-    * artifact row (its `batch` column = the micro-batch id).
-    */
-  def profileStream(stream: DataFrame, cols: Seq[String], histCol: String,
-      bucketWidth: Double, nBuckets: Int)(
-      sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      sink(graft.engine.MergeableProfile.batchProfile(
-        batch.withColumn("_mb", lit(batchId)), "_mb", cols, histCol,
-        bucketWidth, nBuckets), batchId)
-    }
-
-  /** Streaming decontamination as a continuously-updating RESULT TABLE:
-    * flag arriving docs sharing a word 3-gram with a STATIC benchmark
-    * table — a stream-static join, the idiomatic shape for enrichment
-    * against slowly-changing reference data. The benchmark collapses to
-    * its distinct hashed shingle set once per micro-batch plan (small by
-    * the eval-set contract, so the join broadcasts); the stream side is
-    * the same stateless shingle scan as batch
-    * [[graft.ops.Dedup.contaminationScores]], and the per-doc overlap
-    * count is a per-batch aggregation over the doc's own rows. Emits
-    * `(id, n_sh, n_overlap, contamination)` per contaminated doc in
-    * UPDATE mode — aggregation state is one row per contaminated doc
-    * key, UNBOUNDED over the stream's lifetime. Use only when a
-    * queryable running result table is worth that state;
-    * [[decontaminateStream]] is the bounded-state default.
-    */
-  def decontaminateStreamRunning(stream: DataFrame, keyCol: String, textCol: String,
-      bench: DataFrame, benchTextCol: String): DataFrame = {
-    import graft.ops.Dedup
-    val bsh = bench
-      .select(explode(Dedup.shingles(col(benchTextCol))).as("s0"))
-      .select(xxhash64(col("s0")).as("s"))
-      .distinct()
-    stream
-      .select(col(keyCol).as("id"), Dedup.shingles(col(textCol)).as("sh"))
-      .select(col("id"), size(col("sh")).as("n_sh"), explode(col("sh")).as("s0"))
-      .select(col("id"), col("n_sh"), xxhash64(col("s0")).as("s"))
-      .join(broadcast(bsh), Seq("s"), "left_semi")
-      .groupBy(col("id"), col("n_sh"))
-      .agg(count(lit(1)).as("n_overlap"))
-      .withColumn("contamination",
-        round(col("n_overlap").cast("double") / col("n_sh"), 6))
   }
 
   /** Streaming gap sessionization: the built-in `session_window`

@@ -40,19 +40,45 @@ class StreamingValidationSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
   test("windowed violation counts with watermark") {
     import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.Generate
     implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Ev]
-    val q = StreamingValidation
-      .violationCountsByWindow(mem.toDF(), spec, "ts", "10 seconds", "5 seconds")
-      .writeStream.format("memory").queryName("sv_windows").outputMode("update").start()
-    try {
-      mem.addData(Ev("BAD", 5, t(1)), Ev("BAD2", 5, t(2)), Ev("d1", 0, t(11)))
-      q.processAllAvailable()
-      val got = spark.table("sv_windows").collect()
-        .map(r => (r.getString(1), r.getLong(2)))
-      assert(got.contains(("$.doc_id.pattern", 2L))) // both BADs in window 0-10s
-      assert(got.contains(("$.n_tok.minimum", 1L)))  // d1 in window 10-20s
-    } finally q.stop()
+    val batch1 = Seq(Ev("BAD", 5, t(1)), Ev("BAD2", 5, t(2)), Ev("d1", 0, t(11)))
+    val batch2 = Seq(Ev("d2", 0, t(13)), Ev("BAD3", 0, t(21)))
+    // `spec`'s regex check is not prefilter-cheap, so violationsWith takes
+    // its explode_outer path; a minimum-only spec takes the fast path
+    // (where(!valid) + plain explode)
+    val cheap = SchemaParser.parse(
+      """{"type":"object","properties":{"n_tok":{"type":"integer","minimum":1}}}""")
+    for ((sch, outer, name) <- Seq((spec, true, "sv_windows"), (cheap, false, "sv_windows_fast"))) {
+      val mem = MemoryStream[Ev]
+      val counts = StreamingValidation
+        .violationCountsByWindow(mem.toDF(), sch, "ts", "10 seconds", "5 seconds")
+      assert(counts.queryExecution.analyzed.collect { case g: Generate => g.outer } == Seq(outer),
+        s"$name must take the ${if (outer) "outer" else "fast"} path")
+      val q = counts.writeStream.format("memory").queryName(name).outputMode("update").start()
+      try {
+        mem.addData(batch1: _*)
+        q.processAllAvailable()
+        if (sch eq spec) {
+          val got = spark.table("sv_windows").collect()
+            .map(r => (r.getString(1), r.getLong(2)))
+          assert(got.contains(("$.doc_id.pattern", 2L))) // both BADs in window 0-10s
+          assert(got.contains(("$.n_tok.minimum", 1L)))  // d1 in window 10-20s
+        }
+        mem.addData(batch2: _*)
+        q.processAllAvailable()
+        // latest update per (window, constraint) ≡ batch violations over
+        // the same rows, grouped by the same 10-second windows
+        val got = spark.table(name)
+          .groupBy($"window.start", $"constraint_id").agg(max("n"))
+          .as[(Timestamp, String, Long)].collect().toSet
+        val rows = (batch1 ++ batch2).map(e => (e.doc_id, e.n_tok, e.ts)).toDF("doc_id", "n_tok", "ts")
+        val want = ValidationEngine.violations(rows, sch, Seq("ts"))
+          .groupBy(window($"ts", "10 seconds").getField("start"), $"constraint_id").count()
+          .as[(Timestamp, String, Long)].collect().toSet
+        assert(want.nonEmpty && got == want, s"$name: streamed $got, batch $want")
+      } finally q.stop()
+    }
   }
 
   test("drift monitor (mapGroupsWithState) ≡ batch drift on the accumulated stream") {
@@ -102,7 +128,7 @@ class StreamingValidationSpec extends AnyFunSuite with SparkSessionTestWrapper {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
-    val q = StreamingValidation.dedupStream(mem.toDF(), "doc_id", "ts", "10 seconds")
+    val q = mem.toDF().withWatermark("ts", "10 seconds").dropDuplicatesWithinWatermark("doc_id")
       .writeStream.format("memory").queryName("sv_dedup").outputMode("append").start()
     try {
       mem.addData(Ev("d1", 1, t(0)), Ev("d1", 2, t(1)), Ev("d2", 3, t(2)))
@@ -206,7 +232,8 @@ class StreamingValidationSpec extends AnyFunSuite with SparkSessionTestWrapper {
       (2L, "the cat sat down"))                      // 1 of 2 shingles
     val bench = benchRows.toDF("doc_id", "text")
     val mem = MemoryStream[(Long, String)]
-    val q = StreamingValidation.decontaminateStreamRunning(
+    // the batch operator, run on the stream in update mode
+    val q = graft.ops.Dedup.contaminationScores(
         mem.toDF().toDF("doc_id", "text"), "doc_id", "text", bench, "text")
       .writeStream.format("memory").queryName("sv_decon").outputMode("update").start()
     try {
@@ -222,6 +249,11 @@ class StreamingValidationSpec extends AnyFunSuite with SparkSessionTestWrapper {
         .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
       assert(got == want)
       assert(!got.contains(1L), "zero-overlap docs must emit nothing")
+      // the running form keeps one aggregation state store (one row per
+      // contaminated doc), unlike the bounded foreachBatch form below
+      val prog = q.lastProgress
+      assert(prog != null && prog.stateOperators.length == 1,
+        s"expected one state operator, got ${prog.stateOperators.length}")
     } finally q.stop()
   }
 
@@ -315,12 +347,15 @@ class StreamingValidationSpec extends AnyFunSuite with SparkSessionTestWrapper {
       (2L, "the cat sat down"))
     val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
     val mem = MemoryStream[(Long, String)]
-    val q = StreamingValidation.decontaminateStream(
-        mem.toDF().toDF("doc_id", "text"), "doc_id", "text", bench, "text") {
-        (scores, _) =>
+    // the batch operator once per micro-batch
+    val q = mem.toDF().toDF("doc_id", "text").writeStream.foreachBatch {
+        (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          val scores = graft.ops.Dedup.contaminationScores(
+            batch, "doc_id", "text", bench, "text")
           buf.synchronized {
             buf ++= scores.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
           }
+          ()
       }.start()
     try {
       mem.addData(docRows.take(2): _*)
@@ -350,12 +385,15 @@ class StreamingValidationSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val artifacts = scala.collection.mutable.ArrayBuffer
       .empty[org.apache.spark.sql.DataFrame]
     val mem = MemoryStream[(Long, String, Option[Int])]
-    val q = StreamingValidation.profileStream(
-        mem.toDF().toDF("id", "src", "score"), cols, "score", 5.0, 8) {
-        (artifact, _) =>
+    // one batch profile per micro-batch, the micro-batch id as its batch column
+    val q = mem.toDF().toDF("id", "src", "score").writeStream.foreachBatch {
+        (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
+          val artifact = MergeableProfile.batchProfile(
+            batch.withColumn("_mb", lit(batchId)), "_mb", cols, "score", 5.0, 8)
           // a real sink appends to a parquet/Iceberg artifact table;
           // localCheckpoint stands in (collect-and-recreate would too)
           artifacts.synchronized { artifacts += artifact.localCheckpoint() }
+          ()
       }.start()
     try {
       mem.addData(rows.take(120): _*)
