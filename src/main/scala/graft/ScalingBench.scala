@@ -171,6 +171,6 @@ object ScalingBench {
     val hwScale = cal4N / calN // ideal = 4.0 on real hardware
     val effNorm = (thr4N / thrN) / hwScale
 
-    println(s"""{"rows":$rows,"n":$n,"secN":$secN,"sec4N":$sec4N,"thrN":$thrN,"thr4N":$thr4N,"efficiency":$eff,"hw_scale":$hwScale,"efficiency_normalized":$effNorm,"compute_secN":$csecN,"compute_sec4N":$csec4N,"compute_efficiency":$ceff,"steady_secN":$ssecN,"steady_sec4N":$ssec4N,"steady_efficiency":$seff,"rep_host_loads":[${repLoads.mkString(",")}]}""")
+    println(s"""{"rows":$rows,"n":$n,"reps":$reps,"secN":$secN,"sec4N":$sec4N,"thrN":$thrN,"thr4N":$thr4N,"efficiency":$eff,"hw_scale":$hwScale,"efficiency_normalized":$effNorm,"compute_secN":$csecN,"compute_sec4N":$csec4N,"compute_efficiency":$ceff,"steady_secN":$ssecN,"steady_sec4N":$ssec4N,"steady_efficiency":$seff,"rep_host_loads":[${repLoads.mkString(",")}]}""")
   }
 }

@@ -27,14 +27,14 @@ object StreamingValidation {
     * `(window, constraint_id, n)` per event-time window, late data beyond
     * the watermark dropped. The rows come from the batch violation path
     * ([[ValidationEngine.violationsWith]]), so a stream takes the same
-    * fast or outer strategy as batch. Output mode: update/append per
-    * sink choice.
+    * fast or outer strategy as batch. The watermark sits on the violation
+    * rows, so only invalid rows advance it, whichever strategy runs.
+    * Output mode: update/append per sink choice.
     */
   def violationCountsByWindow(stream: DataFrame, spec: SchemaSpec,
       timeCol: String, windowDur: String, watermarkDelay: String): DataFrame =
-    ValidationEngine.violationsWith(
-        ValidationEngine.annotate(stream, spec).withWatermark(timeCol, watermarkDelay),
-        Seq(timeCol))
+    ValidationEngine.violationsWith(ValidationEngine.annotate(stream, spec), Seq(timeCol))
+      .withWatermark(timeCol, watermarkDelay)
       .groupBy(window(col(timeCol), windowDur), col("constraint_id"))
       .agg(count(lit(1)).as("n"))
 

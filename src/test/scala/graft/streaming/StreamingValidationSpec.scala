@@ -42,7 +42,10 @@ class StreamingValidationSpec extends AnyFunSuite with SparkSessionTestWrapper {
     import spark.implicits._
     import org.apache.spark.sql.catalyst.plans.logical.Generate
     implicit val sqlCtx = spark.sqlContext
-    val batch1 = Seq(Ev("BAD", 5, t(1)), Ev("BAD2", 5, t(2)), Ev("d1", 0, t(11)))
+    // d9 is valid under both specs and later than every invalid row: only
+    // violation rows advance the watermark, so batch2's invalid rows for
+    // earlier windows are still counted, not dropped as late
+    val batch1 = Seq(Ev("BAD", 5, t(1)), Ev("BAD2", 5, t(2)), Ev("d1", 0, t(11)), Ev("d9", 5, t(40)))
     val batch2 = Seq(Ev("d2", 0, t(13)), Ev("BAD3", 0, t(21)))
     // `spec`'s regex check is not prefilter-cheap, so violationsWith takes
     // its explode_outer path; a minimum-only spec takes the fast path
