@@ -3,7 +3,7 @@ package graft
 import graft.engine.ValidationEngine
 import graft.ops.{Dedup, Pipeline, TextOps}
 import graft.spec.SchemaParser
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The integration shape a corpus user actually runs — one end-to-end
@@ -52,6 +52,19 @@ object AssemblyPipeline {
     * lineage, later stages plan against a leaf.
     */
   private def stage(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
+
+  /** `df` with `metrics` observed on whichever job first materializes
+    * it (a stage write or a `stage` checkpoint), and their values, read
+    * after that job. Stage scalars ride the jobs that already run, so no
+    * count re-scans a stage.
+    */
+  private def observed(df: DataFrame, metrics: Column*): (DataFrame, () => Map[String, Long]) = {
+    val obs = new Observation()
+    (df.observe(obs, metrics.head, metrics.tail: _*),
+      () => obs.get.map { case (k, v) => k -> v.asInstanceOf[Long] })
+  }
+
+  private val nRows = count(lit(1))
 
   /** One assembly pass over `docs` (doc_id, text, source). `benchPred`
     * marks the held-out eval slice used for decontamination;
@@ -102,29 +115,31 @@ object AssemblyPipeline {
     }
 
     /** One committed stage: `compute` builds the stage's output frame
-      * plus a scalar thunk evaluated AFTER materialization (so counts
-      * run against the leaf, and intra-stage frames it closes over are
-      * already localCheckpointed). Without `checkpoint` this is the
-      * in-memory form; with it, committed stages are skipped wholesale.
+      * with its scalars observed on it (or on intra-stage frames that a
+      * `stage` checkpoint already materialized), plus a thunk that reads
+      * them. The one job that materializes the output — the `stage`
+      * checkpoint without `checkpoint`, the [[graft.engine.StageIO]]
+      * write with it — fires the observations, so a stage is write →
+      * scalars → commit → read and nothing re-scans it. With
+      * `checkpoint`, committed stages are skipped wholesale.
       */
     def step(name: String)(
-        compute: => (DataFrame, DataFrame => Map[String, Long]))
+        compute: => (DataFrame, () => Map[String, Long]))
         : (DataFrame, Map[String, Long]) =
       checkpoint match {
         case None =>
           val (df0, scalars) = compute
           val df = stage(df0)
-          (df, scalars(df))
+          (df, scalars())
         case Some(io) =>
           if (io.completedStages()(name)) (io.readStage(name), io.stageScalars(name))
           else {
             val (df0, scalars) = compute
             io.writeStage(name, df0)
-            val df = io.readStage(name)
-            val m = scalars(df)
+            val m = scalars()
             io.commitStage(name, m)
             onStageComputed(name)
-            (df, m)
+            (io.readStage(name), m)
           }
       }
 
@@ -132,20 +147,23 @@ object AssemblyPipeline {
     //    checkpointed violations sink in the production run — here the
     //    count is the invariant)
     val (valid, mValid) = step("validate") {
-      val annotated = ValidationEngine.annotate(docs, spec)
-      val df = annotated.where(col(ValidationEngine.PassCol))
-        .select(docs.columns.map(col): _*)
-      (df, out => Map("n_input" -> docs.count(), "n_valid" -> out.count()))
+      val (cols, pass) = (docs.columns.toSeq.map(col), col(ValidationEngine.PassCol))
+      val (annotated, scalars) = observed(
+        ValidationEngine.annotate(docs, spec).select(cols :+ pass: _*),
+        nRows.as("n_input"), count_if(pass).as("n_valid"))
+      (annotated.where(pass).select(cols: _*), scalars)
     }
     val nInput = mValid("n_input")
     val nValid = mValid("n_valid")
 
     // 2) exact dedup: remove every non-survivor of an exact group
     val (afterExact, mExact) = step("exact_dedup") {
-      val dropList = stage(Dedup.exactDuplicates(valid, "doc_id", "text")
-        .select(col("doc_id")))
-      val df = valid.join(dropList, Seq("doc_id"), "left_anti")
-      (df, out => Map("dropped" -> dropList.count(), "kept" -> out.count()))
+      val (drops, dropped) = observed(Dedup.exactDuplicates(valid, "doc_id", "text")
+        .select(col("doc_id")), nRows.as("dropped"))
+      val dropList = stage(drops)
+      val (df, kept) = observed(valid.join(dropList, Seq("doc_id"), "left_anti"),
+        nRows.as("kept"))
+      (df, () => dropped() ++ kept())
     }
     val nExactDropped = mExact("dropped")
     val nAfterExact = mExact("kept")
@@ -155,20 +173,22 @@ object AssemblyPipeline {
     // 3) near-dup: LSH pairs → connected components → canonical per
     //    cluster (quality argmax); keep canonical docs only
     val (afterNear, mNear) = step("near_dedup") {
-      val pairs = stage(Dedup.minhashCandidatePairs(
-        Dedup.minhashSignature(afterExact, "doc_id", "text"), "doc_id"))
+      val (pairs0, pairCount) = observed(Dedup.minhashCandidatePairs(
+        Dedup.minhashSignature(afterExact, "doc_id", "text"), "doc_id"), nRows.as("pairs"))
+      val pairs = stage(pairs0)
       val labels = Dedup.connectedComponents(pairs, "a", "b")
+      val labeled = labels.count()
       val scored = TextOps.qualityFeatures(afterExact, "text")
         .select(col("doc_id"), col("quality"))
-      val canonical = stage(
-        Pipeline.canonicalPerCluster(scored, "doc_id", "quality", labels))
-      val df = afterExact.join(
-        canonical.select(col("canonical_id").as("doc_id")), Seq("doc_id"), "left_semi")
-      (df, out => Map(
-        "pairs" -> pairs.count(), "labeled" -> labels.count(),
-        "clusters" -> canonical.count(),
-        "cluster_docs" -> canonical.agg(sum("n_docs")).collect()(0).getLong(0),
-        "kept" -> out.count()))
+      val (canonical0, clusters) = observed(
+        Pipeline.canonicalPerCluster(scored, "doc_id", "quality", labels),
+        nRows.as("clusters"),
+        coalesce(sum(col("n_docs")).cast("long"), lit(0L)).as("cluster_docs"))
+      val canonical = stage(canonical0)
+      val (df, kept) = observed(afterExact.join(
+        canonical.select(col("canonical_id").as("doc_id")), Seq("doc_id"), "left_semi"),
+        nRows.as("kept"))
+      (df, () => pairCount() ++ clusters() ++ kept() + ("labeled" -> labeled))
     }
     val nPairs = mNear("pairs")
     val nLabeled = mNear("labeled")
@@ -215,9 +235,12 @@ object AssemblyPipeline {
     val (afterQuality, mGate) =
       if (!gateActive) (afterNear, Map("dropped" -> 0L, "kept" -> nAfterNear))
       else step("quality_gate") {
-        val drops = stage(gateLanes(afterNear).reduce(_ union _).distinct())
-        val df = afterNear.join(drops, Seq("doc_id"), "left_anti")
-        (df, out => Map("dropped" -> drops.count(), "kept" -> out.count()))
+        val (drops0, dropped) = observed(
+          gateLanes(afterNear).reduce(_ union _).distinct(), nRows.as("dropped"))
+        val drops = stage(drops0)
+        val (df, kept) = observed(afterNear.join(drops, Seq("doc_id"), "left_anti"),
+          nRows.as("kept"))
+        (df, () => dropped() ++ kept())
       }
     val nQualityDropped = mGate("dropped")
     val nAfterQuality = mGate("kept")
@@ -227,15 +250,18 @@ object AssemblyPipeline {
     // 4) decontamination: the held-out eval slice leaves the corpus, and
     //    corpus docs sharing >= threshold of their shingles with it drop
     val (afterDecon, mDecon) = step("decontaminate") {
-      val bench = afterQuality.where(benchPred)
-      val corpus = afterQuality.where(!benchPred)
-      val contaminated = stage(Dedup.contaminationScores(
-          corpus, "doc_id", "text", bench, "text")
+      val (contaminated0, contaminatedCount) = observed(Dedup.contaminationScores(
+          afterQuality.where(!benchPred), "doc_id", "text",
+          afterQuality.where(benchPred), "text")
         .where(col("contamination") >= contaminationThreshold)
-        .select(col("id").as("doc_id")))
-      val df = corpus.join(contaminated, Seq("doc_id"), "left_anti")
-      (df, out => Map("eval_slice" -> bench.count(),
-        "contaminated" -> contaminated.count(), "kept" -> out.count()))
+        .select(col("id").as("doc_id")), nRows.as("contaminated"))
+      val contaminated = stage(contaminated0)
+      // the eval slice is counted on the write's own scan of its input
+      val (in, evalSlice) = observed(afterQuality, count_if(benchPred).as("eval_slice"))
+      val (df, kept) = observed(
+        in.where(!benchPred).join(contaminated, Seq("doc_id"), "left_anti"),
+        nRows.as("kept"))
+      (df, () => evalSlice() ++ contaminatedCount() ++ kept())
     }
     val nBench = mDecon("eval_slice")
     val nContaminated = mDecon("contaminated")
@@ -289,22 +315,24 @@ object AssemblyPipeline {
             rates, if (mixShares.isDefined) 0.0 else defaultRate)
       // normalize the stage output: n_tok rides along either way (in the
       // non-mix flow it is counted only on the sampled survivors)
-      val df =
+      observed(
         if (mixShares.isDefined) sampled
-        else sampled.withColumn("n_tok", TextOps.tokenCount(col("text")))
-      (df, out => Map("kept" -> out.count()))
+        else sampled.withColumn("n_tok", TextOps.tokenCount(col("text"))),
+        nRows.as("kept"))
     }
     val nSampled = mSample("kept")
 
     // 6) sequence packing over the sample; the stage output IS the
     //    assembled corpus — doc rows with their pack assignment
     val (assembled, mPack) = step("pack") {
-      val packed = stage(Pipeline.packSequences(withTok, packKey, "n_tok",
-        "source", budget = packBudget, nShards = 8))
+      val (packed0, packedCount) = observed(Pipeline.packSequences(withTok, packKey, "n_tok",
+        "source", budget = packBudget, nShards = 8), nRows.as("docs"))
+      val packed = stage(packed0)
+      // an observed metric cannot hold a distinct count: bins is one job
+      val bins = packed.select("source", "shard", "bin_id").distinct().count()
       val df = withTok.join(
         packed.select(packKey, "shard", "bin_id"), Seq(packKey))
-      (df, _ => Map("docs" -> packed.count(),
-        "bins" -> packed.select("source", "shard", "bin_id").distinct().count()))
+      (df, () => packedCount() + ("bins" -> bins))
     }
     val nPacked = mPack("docs")
     require(nPacked == nSampled, "packing assigns every sampled doc to a bin")

@@ -213,8 +213,11 @@ final class CheckpointRunner(spark: SparkSession, io: TableIO) {
     val todo0 = units.filterNot { case (id, _, _) => done(id) }
     val todo = limit.fold(todo0)(todo0.take) // simulated interrupt
 
+    /** `proceed` runs before each step after the violations write and
+      * throws once the unit is cancelled.
+      */
     def runUnit(unitId: String, p: String,
-        pred: Option[org.apache.spark.sql.Column]): PartitionResult = {
+        pred: Option[org.apache.spark.sql.Column], proceed: () => Unit): PartitionResult = {
       val partSlice =
         if (p == CheckpointRunner.NullUnit) df.where(col(partCol).isNull)
         else df.where(col(partCol) === p) // partition pruning when the
@@ -247,6 +250,7 @@ final class CheckpointRunner(spark: SparkSession, io: TableIO) {
         ValidationEngine.violationsWith(annObs, Seq(keyCol)))(k =>
         ValidationEngine.violationsCappedWith(annObs, Seq(keyCol), k)))
       val m = obs.get // the write above was the action; its listener has the row
+      proceed()
       if (emitValid)
         // a fresh annotate (not annObs): an Observation is one-shot, and
         // this second action must not re-trigger it
@@ -258,24 +262,61 @@ final class CheckpointRunner(spark: SparkSession, io: TableIO) {
         m("n_failed").asInstanceOf[Long], m("n_violations").asInstanceOf[Long])
 
       // commit point: manifest row written only after outputs are durable
+      proceed()
       io.commit(res, java.time.Instant.now())
       res
     }
 
     if (concurrency == 1 || todo.size <= 1)
-      todo.map { case (unitId, p, pred) => runUnit(unitId, p, pred) }
-    else {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(concurrency)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-      try {
-        val futures = todo.map { case (unitId, p, pred) =>
-          Future(runUnit(unitId, p, pred))
+      todo.map { case (unitId, p, pred) => runUnit(unitId, p, pred, () => ()) }
+    else runConcurrently(todo.map { case (unitId, p, pred) =>
+      (proceed: () => Unit) => runUnit(unitId, p, pred, proceed)
+    }, concurrency)
+  }
+
+  /** Run `units` on a pool of `concurrency` driver threads, each unit's
+    * Spark jobs under its own job tag. The first failure cancels every
+    * sibling: running jobs through their units' tags, queued units before
+    * they start, and units between jobs at their next `proceed` check
+    * (each unit gets one that throws once a sibling has failed). A
+    * cancelled unit fails before its commit point, so it leaves no
+    * manifest entry and re-runs on resume. After every unit has stopped,
+    * the first failure is rethrown with each other unit's failure
+    * attached as suppressed. Results keep unit order.
+    */
+  private def runConcurrently(units: Seq[(() => Unit) => PartitionResult],
+      concurrency: Int): Seq[PartitionResult] = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    import scala.util.{Failure, Try}
+    val sc = spark.sparkContext
+    val tags = units.map(_ => s"graft-unit-${java.util.UUID.randomUUID}")
+    val firstFailure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(concurrency)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    val outcomes = try {
+      def proceed(): Unit = if (firstFailure.get != null)
+        throw new java.util.concurrent.CancellationException("a sibling unit failed")
+      val futures = units.zip(tags).map { case (unit, tag) =>
+        Future {
+          proceed()
+          sc.addJobTag(tag)
+          try unit(proceed _) finally sc.removeJobTag(tag)
+        }.transform { t =>
+          t.failed.foreach { e =>
+            if (firstFailure.compareAndSet(null, e))
+              tags.filterNot(_ == tag).foreach(sc.cancelJobsWithTag(_, "a sibling unit failed"))
+          }
+          Try(t)
         }
-        futures.map(Await.result(_, Duration.Inf))
-      } finally pool.shutdown()
+      }
+      futures.map(Await.result(_, Duration.Inf))
+    } finally pool.shutdown()
+    Option(firstFailure.get).foreach { first =>
+      outcomes.collect { case Failure(e) if e ne first => e }.foreach(first.addSuppressed)
+      throw first
     }
+    outcomes.map(_.get)
   }
 }
 

@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Stage-granularity commit/resume seam for composed pipelines — the
   * assembly-pipeline face of the Iceberg checkpoint contract that
@@ -33,7 +34,11 @@ trait StageIO {
   def runDescriptor(): Option[String]
   /** Record the run descriptor before the first stage runs. */
   def writeRunDescriptor(desc: String): Unit
-  /** Durably write one stage's output frame (idempotent overwrite). */
+  /** Durably write one stage's output frame (idempotent overwrite).
+    * MUST run exactly one eager action on `df`: the pipeline observes
+    * the stage's scalars (CollectMetrics) on that very job, so a second
+    * action would be unobserved work and none would leave them unset.
+    */
   def writeStage(name: String, df: DataFrame): Unit
   /** Read a stage's durably written output (a leaf plan — later stages
     * plan against it, which is also what kills the multiplicative
@@ -52,16 +57,21 @@ trait StageIO {
   * for an Iceberg checkpoint table, mirroring [[ParquetManifestIO]]:
   * stage data under `dir/stage=<name>`, the commit point one
   * `dir/_stages/commit-<name>.json` file carrying the stage's scalars
-  * (`{"stage": name, "scalars": {key: value}}`), and the run descriptor
-  * the `dir/_run_descriptor` file — all published atomically by
-  * [[CommitFiles]], so listing, reading and committing stages start no
-  * Spark job.
+  * and the schema of the frame written
+  * (`{"stage": name, "scalars": {key: value}, "schema": <Spark JSON>}`),
+  * and the run descriptor the `dir/_run_descriptor` file — all
+  * published atomically by [[CommitFiles]], so listing, reading and
+  * committing stages start no Spark job. A committed stage is read with
+  * its recorded schema, which skips Parquet schema inference (a job per
+  * read); an entry without one (written by an earlier version, or by a
+  * commit without a write in this instance) is read with inference.
   */
 final class ParquetStageIO(spark: SparkSession, val dir: String) extends StageIO {
   import org.json4s._
   import org.json4s.jackson.JsonMethods.{compact, parse}
 
   private val files = new CommitFiles(spark, dir)
+  private val written = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
   override def completedStages(): Set[String] = files.committed("_stages")
 
@@ -69,16 +79,23 @@ final class ParquetStageIO(spark: SparkSession, val dir: String) extends StageIO
 
   override def writeRunDescriptor(desc: String): Unit = files.put("_run_descriptor", desc)
 
-  override def writeStage(name: String, df: DataFrame): Unit =
+  override def writeStage(name: String, df: DataFrame): Unit = {
+    written.put(name, df.schema)
     df.write.mode(SaveMode.Overwrite).parquet(s"$dir/stage=$name")
+  }
 
-  override def readStage(name: String): DataFrame =
-    spark.read.parquet(s"$dir/stage=$name")
+  override def readStage(name: String): DataFrame = {
+    val schema = files.entry("_stages", name).map(parse(_) \ "schema").collect {
+      case o: JObject => DataType.fromJson(compact(o)).asInstanceOf[StructType]
+    }
+    schema.fold(spark.read)(spark.read.schema).parquet(s"$dir/stage=$name")
+  }
 
   override def commitStage(name: String, scalars: Map[String, Long]): Unit =
     files.commit("_stages", name, compact(JObject(
-      "stage" -> JString(name),
-      "scalars" -> JObject(scalars.toList.sorted.map { case (k, v) => k -> JLong(v) }))))
+      List("stage" -> JString(name),
+        "scalars" -> JObject(scalars.toList.sorted.map { case (k, v) => k -> JLong(v) })) ++
+        Option(written.get(name)).map(s => "schema" -> parse(s.json)))))
 
   override def stageScalars(name: String): Map[String, Long] = {
     implicit val formats: Formats = DefaultFormats

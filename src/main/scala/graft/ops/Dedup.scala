@@ -99,17 +99,31 @@ object Dedup {
     */
   private val IndexSeqListingPaths = 4096L
 
-  /** Edge-count bound for [[connectedComponents]]' local fast path. A
-    * pair graph at or under this many edges (known exactly — the edges
-    * are materialized and counted before the choice) is solved by
-    * driver-side union-find in one collect instead of O(log d) rounds of
-    * 2 distributed joins + a count each: LSH pair graphs at bench scale
-    * are thousands of edges, where the iterative form is pure scheduling
-    * overhead (~1 s measured round 6), while the driver cost is bounded
-    * at ~32 MB of edge rows. Identical labels by construction — both
-    * forms assign every node the component minimum.
+  /** Pair-count bound for [[connectedComponents]]' local fast path. A
+    * pair graph at or under this many pairs and [[CcMaxLocalBytes]]
+    * (both known exactly — one aggregate over the pairs before the
+    * choice) is solved by driver-side union-find in one collect instead
+    * of O(log d) rounds of 2 distributed joins + a count each: LSH pair
+    * graphs at bench scale are thousands of pairs, where the iterative
+    * form is pure scheduling overhead (~1 s measured round 6; 27 jobs
+    * and 2.3 s of a 10k-doc assembly's near-dedup stage), while the
+    * driver cost of long pairs is bounded at ~32 MB of rows. Identical
+    * labels by construction — both forms assign every node the
+    * component minimum.
     */
   private val CcMaxLocalEdges = 1000000L
+
+  /** Byte bound of the same local path: Σ UTF-8 bytes of both endpoints
+    * over all pairs for string keys (16 bytes per pair for long keys).
+    * The pair bound alone does not bound a string graph: 1M pairs of
+    * 1 KiB ids are 2 GiB. The driver holds each string endpoint about
+    * three times (the collected row's String, the UTF8String it is
+    * ranked by, the output row), so 64 MiB of ids costs at most
+    * ~200 MB of payload, the order of the per-row object overhead the
+    * pair bound already admits (2M endpoints × ~100 B). `"d<N>"` doc ids
+    * at the pair bound are ~20 MB, well inside.
+    */
+  private val CcMaxLocalBytes: Long = 64L << 20
 
   /** Round cap of the iterative [[connectedComponents]]: pointer jumping
     * converges in O(log diameter) rounds, so 50 is never reached by a
@@ -137,7 +151,8 @@ object Dedup {
       localProbeKeys: Long = LocalProbeKeysMax,
       broadcastKeys: Long = MaxBroadcastKeys,
       deconBenchBytes: Long = DeconBenchMaxBytes,
-      ccLocalEdges: Long = CcMaxLocalEdges)
+      ccLocalEdges: Long = CcMaxLocalEdges,
+      ccLocalBytes: Long = CcMaxLocalBytes)
 
   /** Total size estimate (bytes) of a plan's leaf relations — file sizes
     * for parquet scans. Driver-only (no job): used to SKIP defensive
@@ -1311,40 +1326,71 @@ object Dedup {
     *
     * Output: `(id, cluster_id)` — one row per node that appears in at
     * least one pair (singletons are not duplicates and never enter the
-    * graph). Pair graphs of at most [[CcMaxLocalEdges]] long-keyed
-    * edges skip the rounds: driver-side union-find, same labels.
+    * graph). Long- and string-keyed pair graphs of at most
+    * [[CcMaxLocalEdges]] pairs and [[CcMaxLocalBytes]] bytes of keys
+    * skip the rounds: one aggregate job measures the pairs, one collect
+    * brings them to the driver, and union-find labels them there. String
+    * keys are ranked in Spark's binary UTF-8 order (`UTF8String`), so the
+    * label is the same component minimum `min` gives in the rounds.
+    * Other key types, null endpoints and larger graphs take the rounds.
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
     connectedComponentsAt(pairs, aCol, bCol, Tiers())
 
-  /** Driver-side union-find over collected edges: every node appearing
-    * in ≥ 1 pair labeled with its component minimum — the same contract
-    * as the iterative path, proven equal on random graphs by OpsSpec.
+  /** Driver-side union-find over collected pairs `(as(i), bs(i))`, with
+    * the keys ranked by `sorted`: every key is labeled with the lowest
+    * ranked key of its component — the same contract as the iterative
+    * path when `sorted` is Spark's order, proven equal on random graphs
+    * by OpsSpec.
     */
-  private def localComponents(edges: Array[(Long, Long)]): Seq[(Long, Long)] = {
-    val parent = new java.util.HashMap[Long, Long]()
-    def find(x: Long): Long = {
+  private def localComponents[K: scala.reflect.ClassTag](as: Array[K], bs: Array[K],
+      sorted: Array[K] => Array[K]): Seq[(K, K)] = {
+    val keys = sorted((as ++ bs).distinct)
+    val rank = new java.util.HashMap[K, Int](keys.length * 2)
+    keys.indices.foreach(i => rank.put(keys(i), i))
+    val parent = Array.range(0, keys.length)
+    def find(x: Int): Int = {
       var r = x
-      while (parent.get(r) != r) r = parent.get(r)
+      while (parent(r) != r) r = parent(r)
       var c = x // path compression
-      while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
+      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
       r
     }
-    edges.foreach { case (a, b) =>
-      if (!parent.containsKey(a)) parent.put(a, a)
-      if (!parent.containsKey(b)) parent.put(b, b)
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { // union by min: the smaller root stays a root
-        if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
-      }
+    as.indices.foreach { i =>
+      val (ra, rb) = (find(rank.get(as(i))), find(rank.get(bs(i))))
+      // union by rank order: the lower-ranked (smaller) root stays a root
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
     }
-    import scala.jdk.CollectionConverters._
-    parent.keySet().asScala.toSeq.map(id => (id, find(id)))
+    keys.indices.map(i => (keys(i), keys(find(i))))
+  }
+
+  /** Strings in Spark's binary UTF-8 order, the order `min` and `least`
+    * use on a string column. It differs from `String.compareTo` (UTF-16
+    * code units) for keys past U+FFFF: "😀" sorts after "｡" here.
+    */
+  private def utf8Sorted(keys: Array[String]): Array[String] =
+    keys.map(k => (org.apache.spark.unsafe.types.UTF8String.fromString(k), k))
+      .sortWith((x, y) => x._1.compareTo(y._1) < 0).map(_._2)
+
+  /** True when a scan of `df` re-reads materialized rows: its optimized
+    * plan is a checkpoint or local relation, under at most a projection.
+    */
+  private def isMaterialized(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
+    import org.apache.spark.sql.execution.LogicalRDD
+    def leaf(p: LogicalPlan) = p.isInstanceOf[LogicalRDD] || p.isInstanceOf[LocalRelation]
+    df.queryExecution.optimizedPlan match {
+      case Project(_, child) => leaf(child)
+      case p => leaf(p)
+    }
   }
 
   private[ops] def connectedComponentsAt(pairs: DataFrame, aCol: String,
       bCol: String, tiers: Tiers): DataFrame = {
-    val sc = pairs.sparkSession.sparkContext
+    import org.apache.spark.sql.Encoders
+    import org.apache.spark.sql.types.{LongType, StringType}
+    val spark = pairs.sparkSession
+    val sc = spark.sparkContext
     // localCheckpoint persists its RDD for the Dataset's lifetime; in an
     // iterative loop the PREVIOUS round's labels-copy must be freed
     // explicitly or block storage grows by one full labels-copy per
@@ -1357,33 +1403,53 @@ object Dedup {
     }
     def free(ids: Set[Int]): Unit =
       ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-    val (edges, edgeIds) = checkpointTracked(
-      pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-        .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst"))))
 
-    // local fast path: the edge count is exact (one cheap count over the
-    // just-checkpointed blocks) and bounds the collect; long-keyed
-    // small graphs resolve driver-side (see [[CcMaxLocalEdges]]).
-    // A null endpoint (impossible for LSH pairs, representable in the
-    // general contract) falls back to the iterative path, whose
-    // null-join semantics are the documented behavior.
-    val longKeyed = pairs.schema(aCol).dataType ==
-        org.apache.spark.sql.types.LongType &&
-      pairs.schema(bCol).dataType == org.apache.spark.sql.types.LongType
-    if (longKeyed && edges.count() <= tiers.ccLocalEdges) {
-      val rows = edges.collect()
-      if (!rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
-        val labeled = localComponents(rows.map(r => (r.getLong(0), r.getLong(1))))
-        free(edgeIds)
+    val ab = pairs.select(col(aCol).as("a"), col(bCol).as("b"))
+    val keyType = ab.schema("a").dataType
+    val localKeyed = ab.schema("b").dataType == keyType &&
+      (keyType == LongType || keyType == StringType)
+    // the pairs are scanned twice (the gate, then the collect or the edge
+    // checkpoint): materialize them once unless they already are
+    val (p, pIds) =
+      if (!localKeyed || isMaterialized(ab)) (ab, Set.empty[Int]) else checkpointTracked(ab)
+
+    // local fast path: one aggregate gives the exact pair count, the key
+    // bytes and the null endpoints, and bounds the collect (see
+    // [[CcMaxLocalEdges]], [[CcMaxLocalBytes]]). A null endpoint
+    // (impossible for LSH pairs, representable in the general contract)
+    // falls back to the iterative path, whose null-join semantics are the
+    // documented behavior.
+    if (localKeyed) {
+      val bytes =
+        if (keyType == StringType)
+          coalesce(sum(octet_length(col("a")) + octet_length(col("b"))), lit(0L))
+        else count(lit(1)) * 16L
+      val gate = p.agg(count(lit(1)), bytes.cast("long"),
+        count_if(col("a").isNull || col("b").isNull)).head()
+      if (gate.getLong(0) <= tiers.ccLocalEdges && gate.getLong(1) <= tiers.ccLocalBytes &&
+          gate.getLong(2) == 0) {
+        val rows = p.collect()
         // LocalRelation (not parallelize): the result carries REAL size
         // stats, so a downstream join against the corpus (canonical
         // selection) can plan the broadcast this label frame merits
-        return pairs.sparkSession
-          .createDataset(labeled)(
-            org.apache.spark.sql.Encoders.product[(Long, Long)])
-          .toDF("id", "cluster_id")
+        val labeled =
+          if (keyType == LongType)
+            spark.createDataset(localComponents(rows.map(_.getLong(0)),
+              rows.map(_.getLong(1)), (k: Array[Long]) => k.sorted))(
+              Encoders.product[(Long, Long)])
+          else
+            spark.createDataset(localComponents(rows.map(_.getString(0)),
+              rows.map(_.getString(1)), utf8Sorted))(
+              Encoders.product[(String, String)])
+        free(pIds)
+        return labeled.toDF("id", "cluster_id")
       }
     }
+
+    val (edges, edgeIds) = checkpointTracked(
+      p.select(col("a").as("src"), col("b").as("dst"))
+        .union(p.select(col("b").as("src"), col("a").as("dst"))))
+    free(pIds)
 
     var (labels, labelIds) = checkpointTracked(
       edges.select(col("src").as("id")).distinct()

@@ -196,6 +196,46 @@ class CheckpointRunnerSpec extends AnyFunSuite with SparkSessionTestWrapper {
       .run(df, spec, "doc_id", "source", split = SubSplit.Bucket(2), concurrency = 4).isEmpty)
   }
 
+  test("concurrent pool: the first failed unit cancels its siblings and reports every failure") {
+    val df = SequenceGen.generate(spark, 2000)
+      .where(org.apache.spark.sql.functions.col("source").isin("src0", "src1"))
+    val out = Files.createTempDirectory("graft_ckpt_cancel").toString
+    CheckpointRunnerSpec.blockedTask = new java.util.concurrent.CountDownLatch(1)
+    // src1 runs a job that blocks until it is cancelled; src0 fails once
+    // that job's task is running
+    final class FailOneIO(inner: TableIO) extends TableIO {
+      override def completedUnits(): Set[String] = inner.completedUnits()
+      override def splitDescriptor(): Option[String] = inner.splitDescriptor()
+      override def writeSplitDescriptor(desc: String): Unit = inner.writeSplitDescriptor(desc)
+      override def writeViolations(unitId: String, v: org.apache.spark.sql.DataFrame): Unit =
+        if (unitId == "src0") {
+          assert(CheckpointRunnerSpec.blockedTask.await(60, java.util.concurrent.TimeUnit.SECONDS))
+          throw new IllegalStateException("unit src0 failed")
+        } else {
+          spark.sparkContext.parallelize(Seq(1), 1).foreach { _ =>
+            CheckpointRunnerSpec.blockedTask.countDown()
+            val ctx = org.apache.spark.TaskContext.get()
+            val deadline = System.nanoTime() + 120L * 1000000000L
+            while (!ctx.isInterrupted() && System.nanoTime() < deadline) Thread.sleep(20)
+          }
+          inner.writeViolations(unitId, v)
+        }
+      override def commit(res: PartitionResult, at: java.time.Instant): Unit = inner.commit(res, at)
+    }
+    val t0 = System.nanoTime()
+    val err = intercept[IllegalStateException] {
+      new CheckpointRunner(spark, new FailOneIO(new ParquetManifestIO(spark, out)))
+        .run(df, spec, "doc_id", "source", concurrency = 2)
+    }
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(err.getMessage == "unit src0 failed")
+    assert(err.getSuppressed.toSeq.map(_.getClass) == Seq(classOf[org.apache.spark.SparkException]),
+      s"the cancelled sibling's failure rides along: ${err.getSuppressed.toSeq}")
+    assert(secs < 60, s"the blocked sibling was not cancelled (${secs}s)")
+    assert(new ParquetManifestIO(spark, out).completedUnits().isEmpty,
+      "neither the failed nor the cancelled unit may commit")
+  }
+
   test("TableIO seam: the runner drives any implementation (in-memory), commit strictly after output") {
     final class MemoryIO extends TableIO {
       val violations = scala.collection.mutable.Map[String, Long]()
@@ -275,4 +315,11 @@ class CheckpointRunnerSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // every constraint that fails somewhere still has at least one exemplar
     assert(capV.keySet == fullV.keySet)
   }
+}
+
+object CheckpointRunnerSpec {
+  /** Counted down by the blocking task (local mode: same JVM); a fresh
+    * latch per run of the test that uses it.
+    */
+  @volatile var blockedTask = new java.util.concurrent.CountDownLatch(1)
 }

@@ -3,7 +3,6 @@ package graft.engine
 import graft.SparkSessionTestWrapper
 import graft.gen.SequenceGen
 import graft.spec.SchemaParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
@@ -15,31 +14,6 @@ import java.nio.file.{Files, Paths}
 class CommitManifestSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
   private lazy val spec = SchemaParser.parse(graft.Main.builtinSpec)
-
-  /** Jobs started while `body` runs. Listener delivery is asynchronous,
-    * so a sentinel job in its own group is run afterwards and awaited:
-    * the bus is ordered, so every earlier job start has arrived by then.
-    */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val started = new java.util.concurrent.atomic.AtomicInteger
-    val sentinel = new java.util.concurrent.CountDownLatch(1)
-    val group = s"sentinel-${java.util.UUID.randomUUID}"
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          sentinel.countDown()
-        else started.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    try {
-      val out = body
-      sc.setJobGroup(group, "sentinel")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      assert(sentinel.await(30, java.util.concurrent.TimeUnit.SECONDS))
-      (out, started.get)
-    } finally sc.removeSparkListener(l)
-  }
 
   test("an outDir in the older _manifest/part=<id>/ Parquet layout is rejected") {
     val out = Files.createTempDirectory("graft_manifest_old").toString

@@ -668,6 +668,58 @@ class OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(iter.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == expect)
   }
 
+  /** Random string pair graph over `d<N>` and accented ids, plus two
+    * components of keys whose UTF-16 and UTF-8 orders disagree ("😀" < "｡"
+    * and "𝔸" < "ｚ" as Java Strings, the reverse in Spark's binary UTF-8
+    * order), and its labels by brute force: union-find with the component
+    * minimum taken in UTF-8 byte order.
+    */
+  private lazy val stringGraph: (Seq[(String, String)], Map[String, String]) = {
+    val rnd = new scala.util.Random(23)
+    val pool = Seq("é", "ß", "ü") ++ (0 until 40).map(i => s"d$i")
+    val pairs = (Seq(("😀", "｡"), ("ｚ", "𝔸"), ("𝔸", "ｚｚ")) ++ (0 until 70).map(_ =>
+      (pool(rnd.nextInt(pool.size)), pool(rnd.nextInt(pool.size)))))
+      .filter { case (a, b) => a != b }.distinct
+    def utf8Lt(x: String, y: String) = java.util.Arrays.compareUnsigned(
+      x.getBytes("UTF-8"), y.getBytes("UTF-8")) < 0
+    val parent = scala.collection.mutable.Map[String, String]()
+    def find(x: String): String = {
+      val p = parent.getOrElse(x, x); if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (utf8Lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
+    }
+    (pairs, pairs.flatMap(p => Seq(p._1, p._2)).distinct.map(n => n -> find(n)).toMap)
+  }
+
+  private def stringLabels(df: org.apache.spark.sql.DataFrame): Map[String, String] =
+    df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+
+  test("connectedComponents on string keys: local ≡ iterative ≡ brute force in Spark's UTF-8 order") {
+    val (pairs, expect) = stringGraph
+    assert("😀" < "｡" && expect("😀") == "｡" && "𝔸" < "ｚ" && expect("ｚｚ") == "ｚ",
+      "the fixture pins minima where String.compareTo and UTF-8 order disagree")
+    val local = Dedup.connectedComponents(pairs.toDF("a", "b"), "a", "b")
+    assert(isLocal(local), "a small string-keyed graph takes the local path")
+    assert(stringLabels(local) == expect)
+    val iter = Dedup.connectedComponentsAt(pairs.toDF("a", "b"), "a", "b",
+      Dedup.Tiers(ccLocalEdges = 0))
+    assert(!isLocal(iter), "the iterative path must run")
+    assert(stringLabels(iter) == expect)
+  }
+
+  test("connectedComponents: a string graph over the bytes bound takes the iterative path") {
+    val (pairs, expect) = stringGraph
+    val bytes = pairs.map { case (a, b) => a.getBytes("UTF-8").length + b.getBytes("UTF-8").length }.sum
+    val df = pairs.toDF("a", "b")
+    val atBound = Dedup.connectedComponentsAt(df, "a", "b", Dedup.Tiers(ccLocalBytes = bytes))
+    assert(isLocal(atBound), "a graph of exactly the bound's bytes stays local")
+    val over = Dedup.connectedComponentsAt(df, "a", "b", Dedup.Tiers(ccLocalBytes = bytes - 1))
+    assert(!isLocal(over), "one byte over the bound takes the iterative path")
+    assert(stringLabels(atBound) == expect && stringLabels(over) == expect)
+  }
+
   test("PQ: every-vector-as-codeword reconstruction is exact — pqTopK ≡ brute force; ADC bit-equal to dot") {
     val rnd = new scala.util.Random(13)
     val emb = (0 until 60).map(i =>

@@ -307,6 +307,46 @@ class PipelineSpec extends AnyFunSuite with SparkSessionTestWrapper {
     }
   }
 
+  test("assembly stage scalars are the committed rows; committed stages read back with no job") {
+    import graft.engine.ParquetStageIO
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods.{compact, parse}
+    val rows = 4000L
+    val num = substring(col("doc_id"), 2, 100).cast("long")
+    val docs = graft.SoakBench.corpus(spark, rows, poolSize = 65521)
+      .withColumn("source", concat(lit("src"), pmod(num, lit(10))))
+    val dir = java.nio.file.Files.createTempDirectory("graft-stage-rows").toString
+    graft.AssemblyPipeline.run(spark, docs, benchPred = pmod(num, lit(1009)) === 5,
+      maxRepetition = 0.5, checkpoint = Some(new ParquetStageIO(spark, dir)))
+
+    // a fresh instance knows only what the commit entries hold
+    val io = new ParquetStageIO(spark, dir)
+    val stages = Seq("validate", "exact_dedup", "near_dedup", "quality_gate",
+      "decontaminate", "sample", "pack")
+    assert(io.completedStages() == stages.toSet)
+    stages.foreach { name =>
+      val durable = spark.read.parquet(s"$dir/stage=$name")
+      val key = name match { case "validate" => "n_valid"; case "pack" => "docs"; case _ => "kept" }
+      assert(io.stageScalars(name)(key) == durable.count(),
+        s"$name: committed $key must be the committed stage's row count")
+      val (read, jobs) = jobsDuring(io.readStage(name))
+      assert(jobs == 0, s"$name: readStage started $jobs jobs")
+      assert(read.schema == durable.schema, s"$name: recorded schema != inferred")
+      assert(read.count() == durable.count())
+    }
+
+    // an entry without a schema (an earlier version's) reads by inference
+    val entry = java.nio.file.Paths.get(dir, "_stages", "commit-pack.json")
+    val body = parse(java.nio.file.Files.readString(entry))
+    assert(body \ "schema" != JNothing)
+    java.nio.file.Files.writeString(entry, compact(body.removeField(_._1 == "schema")))
+    java.nio.file.Files.deleteIfExists(entry.resolveSibling(".commit-pack.json.crc"))
+    val noSchema = new ParquetStageIO(spark, dir).readStage("pack")
+    val durable = spark.read.parquet(s"$dir/stage=pack")
+    assert(noSchema.schema == durable.schema && noSchema.count() == durable.count())
+    assert(io.stageScalars("pack")("docs") == durable.count())
+  }
+
   // === packSequences ===
 
   private lazy val seqs = spark.range(300)
