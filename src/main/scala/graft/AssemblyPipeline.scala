@@ -352,16 +352,8 @@ object AssemblyPipeline {
 
   def main(args: Array[String]): Unit = {
     val rows = sys.env.getOrElse("SPARK_GRAFT_ASSEMBLY_ROWS", "1000000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-assembly")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.parquet.enableNestedColumnVectorizedReader", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Main.session("graft-assembly", "WARN")
+    val cpus = spark.sparkContext.defaultParallelism
 
     // deterministic corpus with arithmetic dup lanes (SoakBench) plus a
     // 10-stratum source column and a JUNK lane for the quality gate:

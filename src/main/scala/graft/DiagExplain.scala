@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for a list of SparkEntry queries to
   * files — the plan-evidence collector for the optimization-round
   * before/after records (plans/r06/). Usage:
@@ -14,14 +12,7 @@ object DiagExplain {
     val names = if (args.length > 2) args.drop(2).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[8]")
-      .appName("diag-explain")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.parquet.enableNestedColumnVectorizedReader", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Main.session("diag-explain", "ERROR")
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       val plan = try {

@@ -57,14 +57,7 @@ object DiagRecall {
     val nQ = if (args.length > 1) args(1).toInt else 64
     val k = if (args.length > 2) args(2).toInt else 10
     val every = if (args.length > 3) args(3).toLong else 61L
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("diag-recall")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.parquet.enableNestedColumnVectorizedReader", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Main.session("diag-recall", "ERROR")
 
     val emb =
       if (dir.startsWith("gen:clustered")) {

@@ -34,16 +34,19 @@ object Main {
       }
     }"""
 
-  /** The session every subcommand runs in. Each value is only a default:
-    * a key the launcher already set (spark-submit's `--master`/`--conf`,
-    * or a `-D` system property) is left alone, because builder values
-    * override the launcher's.
+  /** The session every graft JVM runs in: `local[n]` with `n` shuffle
+    * partitions, `n` = `SPARK_GRAFT_CPUS` (default 32). Each value is only
+    * a default: a key the launcher already set (spark-submit's
+    * `--master`/`--conf`, or a `-D` system property) is left alone,
+    * because builder values override the launcher's. An empty `launcher`
+    * map applies every value (a session that must fix its cores).
     */
   private[graft] def sessionConf(launcher: Map[String, String],
-      env: Map[String, String]): Map[String, String] =
+      env: Map[String, String]): Map[String, String] = {
+    val cpus = env.getOrElse("SPARK_GRAFT_CPUS", "32")
     Map(
-      "spark.master" -> env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"),
-      "spark.sql.shuffle.partitions" -> env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"),
+      "spark.master" -> s"local[$cpus]",
+      "spark.sql.shuffle.partitions" -> cpus,
       "spark.sql.adaptive.enabled" -> "true",
       // arrays (tokens) decode row-by-row without this — measured 2.7×
       // slower scans and a 0.38 (vs 0.79) N→4N scan scaling ratio
@@ -51,8 +54,9 @@ object Main {
       "spark.sql.session.timeZone" -> "UTC",
       "spark.ui.enabled" -> "false"
     ) -- launcher.keySet
+  }
 
-  private def session(appName: String, logLevel: String): SparkSession = {
+  private[graft] def session(appName: String, logLevel: String): SparkSession = {
     val spark = SparkSession.builder().appName(appName)
       .config(sessionConf(new SparkConf().getAll.toMap, sys.env))
       .getOrCreate()

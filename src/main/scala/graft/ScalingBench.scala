@@ -52,13 +52,9 @@ object ScalingBench {
 
     def session(cpus: Int): SparkSession = {
       val s = SparkSession.builder()
-        .master(s"local[$cpus]")
         .appName(s"graft-scaling-$cpus")
-        .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.parquet.enableNestedColumnVectorizedReader", "true")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
+        // the recipe at exactly `cpus` cores, whatever the launcher set
+        .config(Main.sessionConf(Map.empty, Map("SPARK_GRAFT_CPUS" -> cpus.toString)))
         // fixed split size at both levels so the scan parallelism is
         // determined by cores, not by maxPartitionBytes heuristics
         .config("spark.sql.files.maxPartitionBytes", "16m")

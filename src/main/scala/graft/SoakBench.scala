@@ -12,7 +12,9 @@ import java.lang.management.ManagementFactory
   * especially on the bounded pair-expansion path.
   *
   * Corpus (deterministic, parallelism-independent, no joins): `rows`
-  * docs of 24 words drawn from a poolSize-word pool by `hash(base, j)`.
+  * docs of 24 words drawn from the poolSize words `tok0`, `tok1`, … by
+  * `hash(base, j)`; each word is built from its pool index, so no plan
+  * carries the pool itself.
   * Duplicates are arithmetic, not lookups — a doc whose id hits the
   * duplicate lane simply evaluates its neighbor's word formula:
   *   - id % 16 == 0  → base = id+1: exact duplicate of doc id+1
@@ -21,7 +23,7 @@ import java.lang.management.ManagementFactory
   *   - id % 10007 == 0 → one shared boilerplate text: a genuinely hot
   *     LSH/shingle bucket (~rows/10007 identical docs) that MUST be
   *     handled by the maxBucket/maxDf caps, not by luck
-  * Everything is plain codegen'd arithmetic (hash + element_at + concat)
+  * Everything is plain codegen'd arithmetic (hash + pmod + concat)
   * — no HOFs — so generation is scan-speed and the corpus is written to
   * parquet once, untimed.
   *
@@ -41,7 +43,6 @@ object SoakBench {
 
   def corpus(spark: SparkSession, rows: Long,
       poolSize: Int = DefaultPool): DataFrame = {
-    val pool = array((0 until poolSize).map(i => lit(s"tok$i")): _*)
     val base = when(pmod(col("id"), lit(16)).isin(0, 2), col("id") + 1)
       .otherwise(col("id"))
     val words = (0 until 24).map { j =>
@@ -49,7 +50,7 @@ object SoakBench {
         if (j == 23)
           when(pmod(col("id"), lit(16)) === 2, lit(j + 1000)).otherwise(lit(j))
         else lit(j)
-      element_at(pool, pmod(hash(col("_base"), salt), lit(poolSize)) + 1)
+      concat(lit("tok"), pmod(hash(col("_base"), salt), lit(poolSize)).cast("string"))
     }
     val boiler = (0 until 24).map(j => s"tok${j * 7 % poolSize}").mkString(" ")
     spark.range(rows)
@@ -162,19 +163,11 @@ object SoakBench {
 
   def main(args: Array[String]): Unit = {
     val rows = sys.env.getOrElse("SPARK_GRAFT_SOAK_ROWS", "20000000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val poolSize = sys.env.getOrElse("SPARK_GRAFT_SOAK_POOL", DefaultPool.toString).toInt
     val data = s"/tmp/graft_soak_corpus_${rows}_p$poolSize"
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-soak")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.parquet.enableNestedColumnVectorizedReader", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Main.session("graft-soak", "WARN")
+    val cpus = spark.sparkContext.defaultParallelism
 
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(data)))
       corpus(spark, rows, poolSize).write.mode("overwrite").parquet(data)

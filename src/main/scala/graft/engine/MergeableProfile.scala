@@ -95,15 +95,7 @@ object MergeableProfile {
         col(s"${c}__max").cast("string").as("max"),
         hll_sketch_estimate(col(s"${c}__hll")).as("approx_distinct"))
     }
-    profile.select(explode(array(stacked: _*)).as("s"))
-      .select(
-        col("s.column").as("column"),
-        col("s.n").as("n"),
-        col("s.n_null").as("n_null"),
-        round(col("s.n_null") / col("s.n"), 6).as("null_rate"),
-        col("s.min").as("min"),
-        col("s.max").as("max"),
-        col("s.approx_distinct").as("approx_distinct"))
+    TableProfiler.longFormat(profile, stacked)
   }
 
   /** A profile row's histogram as `(bucket, n)` rows — the observed-side

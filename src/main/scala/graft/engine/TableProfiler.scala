@@ -39,6 +39,15 @@ object TableProfiler {
         col(s"${f.name}__max").as("max"),
         col(s"${f.name}__dist").as("approx_distinct"))
     }
+    longFormat(wide, stacked)
+  }
+
+  /** The long `(column, n, n_null, null_rate, min, max, approx_distinct)`
+    * profile format: one row per struct in `stacked`, each built over
+    * `wide`'s single row and holding every field but `null_rate`, which
+    * is derived here.
+    */
+  private[engine] def longFormat(wide: DataFrame, stacked: Seq[Column]): DataFrame =
     wide.select(explode(array(stacked: _*)).as("s"))
       .select(
         col("s.column").as("column"),
@@ -48,7 +57,6 @@ object TableProfiler {
         col("s.min").as("min"),
         col("s.max").as("max"),
         col("s.approx_distinct").as("approx_distinct"))
-  }
 
   /** Grouped quantiles of a numeric column (linear interpolation at
     * index p·(n−1) — the quantile_cont definition, so results are

@@ -19,17 +19,6 @@ object SequenceGen {
   val Vocab = 49152
   val Sources: Seq[String] = (0 until 10).map(i => s"src$i")
 
-  // Injection sites (FIXTURES.md §3). All are disjoint modulo classes so
-  // each bad row trips exactly the intended constraint (plus knock-ons
-  // that follow from it, e.g. empty tokens also fails n_tok minimum).
-  def isDupId(id: Long): Boolean        = id % 1000 == 17 && id >= 1000
-  def isBadSource(id: Long): Boolean    = id % 2000 == 23
-  def isBadNtok(id: Long): Boolean      = id % 1000 == 41
-  def isBadToken(id: Long): Boolean     = id % 1000 == 59
-  def isEmptyTokens(id: Long): Boolean  = id % 2000 == 71
-  def isNullDocId(id: Long): Boolean    = id % 2000 == 83
-  def isBadDocIdFmt(id: Long): Boolean  = id % 2000 == 97
-
   /** The canonical doc_id for row `id`: "d" + the id zero-padded to AT
     * LEAST 10 digits (ids ≥ 10^10 keep all their digits — at the stated
     * 10^12-row design scale padding must never truncate).
@@ -50,6 +39,11 @@ object SequenceGen {
   /** `parts`: explicit range slice count (0 = default parallelism).
     * Output rows are a pure function of `id`, so any slicing yields the
     * same table — this only controls task granularity / file count.
+    *
+    * Injection sites (FIXTURES.md §3) are the `id % m` lanes below. All
+    * are disjoint modulo classes so each bad row trips exactly the
+    * intended constraint (plus knock-ons that follow from it, e.g. empty
+    * tokens also fails n_tok minimum).
     */
   def generate(spark: SparkSession, rows: Long, seed: Long = 42L,
       parts: Int = 0): DataFrame = {

@@ -18,7 +18,7 @@ class MainSpec extends AnyFunSuite {
   }
 
   test("a key the launcher set is left alone, even when the env names a value for it") {
-    val env = Map("SPARK_GRAFT_MASTER" -> "local[2]", "SPARK_GRAFT_SHUFFLE" -> "64")
+    val env = Map("SPARK_GRAFT_CPUS" -> "2")
     val conf = Main.sessionConf(Map(master -> "local[1]", shuffle -> "7"), env)
     assert(!conf.contains(master))
     assert(!conf.contains(shuffle))
@@ -27,10 +27,16 @@ class MainSpec extends AnyFunSuite {
   }
 
   test("env values apply only where the launcher is silent") {
-    val env = Map("SPARK_GRAFT_MASTER" -> "local[2]", "SPARK_GRAFT_SHUFFLE" -> "64")
+    val env = Map("SPARK_GRAFT_CPUS" -> "2")
     val conf = Main.sessionConf(Map(master -> "local[1]"), env)
     assert(!conf.contains(master))
-    assert(conf(shuffle) == "64")
+    assert(conf(shuffle) == "2")
     assert(Main.sessionConf(Map(shuffle -> "7"), env)(master) == "local[2]")
+  }
+
+  test("SPARK_GRAFT_CPUS under a silent launcher fixes the cores: master and shuffle partitions") {
+    val conf = Main.sessionConf(Map.empty, Map("SPARK_GRAFT_CPUS" -> "8"))
+    assert(conf(master) == "local[8]")
+    assert(conf(shuffle) == "8")
   }
 }

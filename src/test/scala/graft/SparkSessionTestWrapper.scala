@@ -35,13 +35,8 @@ trait SparkSessionTestWrapper {
 object SparkSessionTestWrapper {
   lazy val shared: SparkSession = {
     val s = SparkSession.builder()
-      .master("local[4]")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.parquet.enableNestedColumnVectorizedReader", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .config(Main.sessionConf(Map.empty, Map("SPARK_GRAFT_CPUS" -> "4")))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -7,5 +7,4 @@ ADDOPENS=""
 for p in $OPENS; do ADDOPENS="$ADDOPENS --add-opens $p=ALL-UNNAMED"; done
 CLASSES="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)/target/scala-2.13/classes"
 exec java $ADDOPENS -Xmx${GRAFT_MEM:-16g} ${GRAFT_JVM_EXTRA} \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$CLASSES:/opt/spark/jars/*" "$@"
